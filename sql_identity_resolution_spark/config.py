@@ -162,21 +162,6 @@ class EngineConfig:
     trust: list[SourceTrust] = field(default_factory=list)
     max_iters: int = 30  # reference default MAX_ITERS (idr_run.py:37)
     cc_algorithm: str = "auto"  # hash_min | star | auto (star above threshold)
-    # above this edge count `auto` skips the hash-min probe and goes straight
-    # to large/small-star. Measured on a 9.46M-edge reference-shaped graph
-    # (400k-conv corpus, local[16]): hash-min converged in 4 rounds at 24.2 s
-    # vs star's 42.4 s for the same labels — a hash-min round is ~2 shuffles
-    # vs star's ~8, and the probe is never wasted (its partial labels are a
-    # valid contraction the star fallback runs on — operators/graph.py). The
-    # probe only loses when the graph needs near-all of hash_min_budget rounds
-    # AND still escalates, bounded at ~2 star-rounds of extra cost, so the
-    # threshold sits high; tune per workload.
-    cc_star_threshold_edges: int = 100_000_000
-    # frontier (vertex-activation) hash-min: only labels that changed last
-    # round propagate — per-round shuffle cost O(frontier-incident edges)
-    # instead of O(E); exactly equivalent labels (monotone-min argument in
-    # operators/graph.py). False = the dense reference-literal form (A/B).
-    cc_frontier: bool = True
     # Small-graph fast path: when the graph to cluster fits under this many
     # edges (a bounded, Arrow-batched collect — ~40 MB of keys at the
     # default, union-find ~1.4 s), run union-find on the driver instead of
@@ -188,10 +173,6 @@ class EngineConfig:
     # Same labels either way, limit-guarded collect with automatic
     # distributed fallback. 0 disables.
     cc_local_max_edges: int = 500_000
-    # CC rounds fused per Spark job: materialize + convergence-check every k
-    # rounds (k=1 ≙ reference's per-iteration check; k>1 trades ≤k−1 extra
-    # rounds for fewer job round-trips/materializations — see operators/graph.py)
-    checkpoint_every: int = 1
     salt_buckets: int = 0  # >0: salt the blocking join on hot keys
     # concurrent writers in the output_write flush pool (stores + the three
     # observability appends). Overlapping IO-heavy write jobs cuts flush wall
@@ -205,22 +186,14 @@ class EngineConfig:
     # SCORED blocks up to this size score ALL pairs (full within-block recall);
     # larger blocks fall back to anchor-star — see blocking.candidate_pairs
     scored_all_pairs_max: int = 64
-    # collapse identical-match_text members to one representative per SCORED
-    # block before pair generation (quadratic → constant on dup-heavy blocks)
-    # — see blocking.dedup_scored_members / duplicate_text_pairs
-    scored_dedup_identical_text: bool = True
-    # link the dropped identical-text copies with linear pre-scored (1.0)
-    # pairs. Safe default. Set False when an active EXACT rule already blocks
+    # SCORED blocks collapse identical-match_text members to one
+    # representative before pair generation (blocking.dedup_scored_members);
+    # this links the dropped copies with linear pre-scored (1.0) pairs. Safe
+    # default. Set False when an active EXACT rule already blocks
     # on a full-text hash (e.g. transcripts' R_FULL_TEXT_EXACT): the exact
     # star edges make these pairs redundant, and skipping them keeps the edge
     # table lean on dup-heavy corpora.
     emit_duplicate_text_pairs: bool = True
-    # score pairs per BLOCK via a cogroup(pairs, roster) pandas kernel
-    # instead of the classic attach-arrays-to-every-pair joins: an entity's
-    # token array ships once per block it has kept pairs in, not once per
-    # pair. token_jaccard only (other scorers fall back to the classic path);
-    # scores are bit-identical between the paths (shared _int_tokens rep).
-    score_grouped: bool = False
     # run the SCORED pipeline on dense long ids: entity keys and band-key
     # strings are mapped to longs once (entity_side/block dims), every shuffle
     # between candidate generation and edge shaping carries fixed-width ints,
@@ -260,33 +233,6 @@ class EngineConfig:
     # declaring match_text_unique; the build is a flat projection of the
     # checkpointed entity frame, ~150 B/entity of int tokens).
     score_broadcast_max_entities: int = 5_000_000
-    # INCR edge MERGE strategy: merge-on-read appends a delta-sized update
-    # part for matched buckets instead of rewriting them (≙ Iceberg
-    # write.merge.mode=merge-on-read). The edge MERGE's only matched-row
-    # change is refreshing last_seen_ts on re-observed pairs, and those pairs
-    # scatter across every bucket — copy-on-write makes each INCR micro-batch
-    # rewrite O(edge table); merge-on-read makes it O(delta) with reads
-    # reconciling against the (delta-sized, AQE-broadcast) update-part keys.
-    # Compaction folds a bucket back to one part at max_parts_per_bucket.
-    edge_merge_on_read: bool = True
-    # INCR membership/clusters/golden sink strategy: these are full-row
-    # delete+inserts keyed by entity_key / resolved_id whose impacted-cluster
-    # semantics legitimately touch rows in most buckets every micro-batch —
-    # copy-on-write made the membership commit rewrite 32/32 buckets
-    # (O(table) write IO) even for a 0.1% delta, the last O(corpus) term on
-    # the chained-INCR path (round-4 measurement). Merge-on-read appends the
-    # delta-sized update rows instead; reads reconcile by key (newest wins,
-    # commit-ordered), compaction bounds part counts per bucket.
-    store_merge_on_read: bool = True
-    # force the INCR subgraph build to the safe 1-hop + both-endpoint edge
-    # restriction even when the steady-state invariant (no committed edge
-    # crosses clusters) would allow the 1-scan fast form. The pipeline also
-    # falls back AUTOMATICALLY for the first INCR run after the MATCH
-    # semantics change (rules/mappings/exclusions — see match_signature):
-    # edges committed under the old semantics may cross clusters that the new
-    # semantics would not have formed, and the fast form would silently drop
-    # edges whose right endpoint is impacted but left is not.
-    incr_safe_edge_restriction: bool = False
     # INCR: materialize the post-merge edge store once (lazy localCheckpoint)
     # when its pointer row count is at or below this — the subgraph build and
     # the confidence edge-stats both scan edges_current after the merge, and

@@ -210,7 +210,9 @@ def generate_transcripts(
         a, b = rng.sample(reps, 2)
         if t_by_c[a] != t_by_c[b]:
             neg.append((min(a, b), max(a, b)))
-    while len(neg) < n_neg and len(all_convs) > 1:
+    # a cross-cluster pair needs two truth clusters: with one (a small corpus
+    # drawn as a single cluster) no sample could ever qualify
+    while len(neg) < n_neg and len(clusters) > 1:
         a, b = rng.sample(all_convs, 2)
         if t_by_c[a] != t_by_c[b]:
             neg.append((min(a, b), max(a, b)))

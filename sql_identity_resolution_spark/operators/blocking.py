@@ -309,22 +309,6 @@ def dedup_scored_members_dense(
     )
 
 
-def members_dense(
-    members: DataFrame, entity_side: DataFrame, scored_types: list[str]
-) -> DataFrame:
-    """SCORED-path members as ``(eid, bkey)`` without identical-text dedup.
-    The inner join drops members with no entity-text row — the classic path
-    drops the same pairs at its inner text joins, just later."""
-    from sql_identity_resolution_spark.operators.scoring import block_key_expr
-
-    return (
-        members.filter(F.col("identifier_type").isin(scored_types))
-        .withColumn("bkey", block_key_expr())
-        .join(entity_side.select("entity_key", "eid"), "entity_key", "inner")
-        .select("eid", "bkey")
-    )
-
-
 def candidate_pairs_dense(
     valid_groups: DataFrame,
     members_e: DataFrame,

@@ -16,17 +16,8 @@ Two CC implementations:
 Both run as driver-controlled DataFrame loops with ``localCheckpoint()`` to
 truncate lineage (the reference's table-swap per iteration,
 idr_run.py:480-481, plays the same role), and pull exactly ONE scalar per
-materialization (the convergence delta) to the driver.
-
-``checkpoint_every=k`` fuses k propagation rounds into ONE Spark job:
-intermediate rounds are lazily ``persist()``-ed (each round computes exactly
-once when the k-th round's checkpoint action runs — without the persist, a
-round's plan is referenced 2-4× by the next round and evaluation would grow
-exponentially in k) and only every k-th round materializes + checks
-convergence. Fewer job round-trips, at the cost of up to k−1 extra rounds
-past the fixed point (a deterministic step that produces no change IS the
-fixed point, so checking only the last fused round is sound). k=1 (default)
-is the reference's check-every-iteration behavior.
+materialization (the convergence delta) to the driver — the reference's
+check-every-iteration behavior.
 """
 
 from __future__ import annotations
@@ -235,15 +226,12 @@ def _with_long_ids_inner(algo_fn, nodes: DataFrame, edges: DataFrame, **kw) -> C
                     path=res.path, rounds=res.rounds)
 
 
-def _hash_min_lp_long(
-    nodes: DataFrame, edges: DataFrame, max_iters: int, checkpoint_every: int,
-    frontier: bool = True,
-) -> CCResult:
+def _hash_min_lp_long(nodes: DataFrame, edges: DataFrame, max_iters: int) -> CCResult:
     """Min-label propagation on long ids; see hash_min_lp for the contract.
 
-    ``frontier=True`` (default) is the vertex-activation form (what Pregel/
-    GraphX LP does): only labels that CHANGED last round are offered to
-    neighbors. Exactly equivalent to the dense form — labels under hash-min
+    Frontier (vertex-activation) form — what Pregel/GraphX LP does: only
+    labels that CHANGED last round are offered to neighbors. Exactly
+    equivalent to the dense self∪neighbors form — labels under hash-min
     are monotonically non-increasing, so a node whose label did not change in
     round i-1 offers the same value it already offered in round i-2; its
     neighbors have it folded in, and re-offering is a no-op. Per-round work
@@ -256,10 +244,7 @@ def _hash_min_lp_long(
     the candidate groupBy shuffles only frontier-incident rows, and the
     labels⟕cands merge is co-partitioned on nid (both sides hash(nid) with
     the same partition count) — ONE delta-sized exchange per round, zero
-    O(V)/O(E) exchanges after round 1.
-
-    ``frontier=False`` keeps the dense self∪neighbors groupBy form (the
-    reference's literal per-round statement) for A/B."""
+    O(V)/O(E) exchanges after round 1."""
     from pyspark.sql import Observation
 
     # parallel edges are common (the same pair matches under several rules /
@@ -279,20 +264,17 @@ def _hash_min_lp_long(
         .dropDuplicates(["src", "dst"])
         .localCheckpoint(eager=True)
     )
-    labels = nodes.select("nid", F.col("nid").alias("lid"))
-    if frontier:
-        # nid-partitioned so every round's labels⟕cands merge is exchange-free
-        labels = labels.repartition("nid")
+    # nid-partitioned so every round's labels⟕cands merge is exchange-free
+    labels = nodes.select("nid", F.col("nid").alias("lid")).repartition("nid")
     labels = labels.localCheckpoint(eager=True)
     front = labels  # round 1: every node is active (offers its own label)
     iterations = 0
     converged = False
     rounds: list[dict] = []
-    step = max(1, checkpoint_every)
-    # layered tail rounds (frontier, unfused): once the frontier is small,
-    # checkpoint ONLY the changed labels and keep the full label table as
-    # base ⟕ overlay layers (all co-partitioned on nid — pure in-memory
-    # coalesce scans, no exchange). The O(V) label rewrite per round was the
+    # layered tail rounds: once the frontier is small, checkpoint ONLY the
+    # changed labels and keep the full label table as base ⟕ overlay layers
+    # (all co-partitioned on nid — pure in-memory coalesce scans, no
+    # exchange). The O(V) label rewrite per round was the
     # measured tail-round floor at 10M nodes (~4 s/round for a 2-row delta,
     # retail_10m_dense_final.json cc_rounds); a delta-sized write is ~free.
     # Layers cap at 3 (each round scans base + layers), then compact.
@@ -302,51 +284,20 @@ def _hash_min_lp_long(
     for i in range(max_iters):
         t_round = time.time()
         iterations = i + 1
-        if frontier:
-            cands = (
-                und.join(front.withColumnRenamed("nid", "dst").hint("shuffle_hash"), "dst", "inner")
-                .groupBy(F.col("src").alias("nid"))
-                .agg(F.min("lid").alias("cand"))
-            )
-            merged = labels.join(cands.hint("shuffle_hash"), "nid", "left").select(
-                "nid",
-                F.least(F.col("lid"), F.coalesce(F.col("cand"), F.col("lid"))).alias("lid"),
-                F.col("lid").alias("cur"),
-            )
-        else:
-            neighbor_labels = (
-                und.join(labels.withColumnRenamed("nid", "dst").hint("shuffle_hash"), "dst", "inner")
-                .select(F.col("src").alias("nid"), F.col("lid").alias("cand"),
-                        F.lit(None).cast("long").alias("cur"))
-            )
-            self_labels = labels.select("nid", F.col("lid").alias("cand"), F.col("lid").alias("cur"))
-            merged = (
-                self_labels.unionByName(neighbor_labels)
-                .groupBy("nid")
-                .agg(F.min("cand").alias("lid"), F.max("cur").alias("cur"))
-            )
-        if (i + 1) % step and i != max_iters - 1:
-            # fused round: LAZY localCheckpoint — no job yet (the next
-            # checkpoint action materializes the whole fused chain as one
-            # job), but the returned plan is a LogicalRDD LEAF, so Catalyst
-            # analysis stays O(round). A persist() here caches data without
-            # truncating the plan: each round references the last 2×+, and
-            # tree traversals don't memoize shared DAG nodes, so fused
-            # ANALYSIS cost grows exponentially in k (driver-side minutes at
-            # k=3 for the star variant — measured, round 4). Freed when the
-            # frame goes unreferenced (ContextCleaner), like any local
-            # checkpoint.
-            fused = merged.localCheckpoint(eager=False)
-            labels = fused.select("nid", "lid")
-            if frontier:
-                front = fused.where(F.col("lid") < F.col("cur")).select("nid", "lid")
-            continue
+        cands = (
+            und.join(front.withColumnRenamed("nid", "dst").hint("shuffle_hash"), "dst", "inner")
+            .groupBy(F.col("src").alias("nid"))
+            .agg(F.min("lid").alias("cand"))
+        )
+        merged = labels.join(cands.hint("shuffle_hash"), "nid", "left").select(
+            "nid",
+            F.least(F.col("lid"), F.coalesce(F.col("cand"), F.col("lid"))).alias("lid"),
+            F.col("lid").alias("cur"),
+        )
         obs = Observation(f"lp_{i}")
         delta_agg = F.sum(F.when(F.col("lid") != F.col("cur"), 1).otherwise(0)).alias("delta")
         layered = (
-            frontier
-            and step == 1
-            and len(layers) < 3
+            len(layers) < 3
             and first_delta is not None
             and prev_delta is not None
             and prev_delta <= max(1, first_delta // 4)
@@ -376,9 +327,8 @@ def _hash_min_lp_long(
             delta = obs.get["delta"]
             labels = nxt.select("nid", "lid")
             layers = []
-            if frontier:
-                # in-memory narrow filter over the checkpointed frame — no job
-                front = nxt.where("_chg").select("nid", "lid")
+            # in-memory narrow filter over the checkpointed frame — no job
+            front = nxt.where("_chg").select("nid", "lid")
         rounds.append({"sec": round(time.time() - t_round, 3), "delta": int(delta or 0)})
         if first_delta is None:
             first_delta = int(delta or 0)
@@ -390,10 +340,7 @@ def _hash_min_lp_long(
                     path="hash_min", rounds=rounds)
 
 
-def hash_min_lp(
-    nodes: DataFrame, edges: DataFrame, max_iters: int = 30, checkpoint_every: int = 1,
-    frontier: bool = True,
-) -> CCResult:
+def hash_min_lp(nodes: DataFrame, edges: DataFrame, max_iters: int = 30) -> CCResult:
     """Min-label propagation to convergence (sql/common/31; idr_run.py:440-481).
 
     labels ← nodes self-labeled; repeat: next = MIN(self ∪ neighbors' labels)
@@ -409,18 +356,13 @@ def hash_min_lp(
       (serial, and impossible at 10^9 labels anyway);
     - convergence is an ``Observation`` on the same job that materializes the
       next labels: ONE Spark action per iteration total, carrying each node's
-      previous label through the aggregation (MAX(cur) — only the self row
-      has it) instead of re-joining cur×next.
+      previous label through the labels⟕candidates merge (``cur``) instead of
+      re-joining cur×next.
     """
-    return _with_long_ids(
-        _hash_min_lp_long, nodes, edges, max_iters=max_iters, checkpoint_every=checkpoint_every,
-        frontier=frontier, disable_aqe=True,
-    )
+    return _with_long_ids(_hash_min_lp_long, nodes, edges, max_iters=max_iters, disable_aqe=True)
 
 
-def _alternating_star_long(
-    nodes: DataFrame, edges: DataFrame, max_iters: int, checkpoint_every: int
-) -> CCResult:
+def _alternating_star_long(nodes: DataFrame, edges: DataFrame, max_iters: int) -> CCResult:
     """Large/small-star on long ids; see alternating_star for the contract."""
     from pyspark.sql import Observation
 
@@ -454,7 +396,6 @@ def _alternating_star_long(
     prev_sig = None
     iterations = 0
     converged = False
-    step = max(1, checkpoint_every)
     for i in range(max_iters):
         iterations = i + 1
         # ---- large-star(u): emit (v, m(u)) for strictly larger neighbors v>u
@@ -467,17 +408,6 @@ def _alternating_star_long(
         )
         self_edges = sm.select(F.col("src").alias("a"), F.col("m").alias("b")).distinct()
         small = _canon(small_edges.union(self_edges), "a", "b")
-        if (i + 1) % step and i != max_iters - 1:
-            # fused round: LAZY localCheckpoint (see _hash_min_lp_long). The
-            # analysis blowup is far worse here — one star round references
-            # the previous round's plan ~16× (each _with_min visits its input
-            # twice, large/small each stack two of them), so persist()-only
-            # fusion costs ~16^k plan-tree traversals per analysis: measured
-            # 9+ DRIVER-side minutes at k=3 on a 12-edge chain. The lazy
-            # checkpoint truncates the analyzed plan to a leaf while still
-            # deferring execution to the next checkpoint action.
-            pairs = small.localCheckpoint(eager=False)
-            continue
         obs = Observation(f"star_{i}")
         small = small.observe(obs, *_signature(small)).localCheckpoint(eager=True)
         sig = (obs.get["n"], obs.get["h"])
@@ -496,9 +426,7 @@ def _alternating_star_long(
     return CCResult(labels=labels, iterations=iterations, converged=converged, path="star")
 
 
-def alternating_star(
-    nodes: DataFrame, edges: DataFrame, max_iters: int = 50, checkpoint_every: int = 1
-) -> CCResult:
+def alternating_star(nodes: DataFrame, edges: DataFrame, max_iters: int = 50) -> CCResult:
     """Large-star/small-star connected components (Kiveris et al. SoCC'14).
 
     Maintains a parent forest as an edge list child→parent with parent<child.
@@ -514,9 +442,7 @@ def alternating_star(
     (``_with_long_ids``): label order during the loop is arbitrary, and the
     final one-shot remap restores resolved_id = MIN(entity_key) string
     semantics (sql/common/40:2)."""
-    return _with_long_ids(
-        _alternating_star_long, nodes, edges, max_iters=max_iters, checkpoint_every=checkpoint_every
-    )
+    return _with_long_ids(_alternating_star_long, nodes, edges, max_iters=max_iters)
 
 
 def _local_union_find(nodes: DataFrame, edges: DataFrame, max_edges: int) -> CCResult | None:
@@ -591,12 +517,10 @@ def connected_components(
     edges: DataFrame,
     algorithm: str = "auto",
     max_iters: int = 30,
-    checkpoint_every: int = 1,
     edge_count_hint: int | None = None,
     star_threshold: int = 100_000_000,
     hash_min_budget: int = 8,
     local_max_edges: int = 0,
-    frontier: bool = True,
 ) -> CCResult:
     """``auto`` (the production default) is a hybrid: graphs shaped like the
     reference's anchor-star output converge under hash-min in ~6 rounds
@@ -627,10 +551,7 @@ def connected_components(
         if n > star_threshold:
             algorithm = "star"
         else:
-            probe = hash_min_lp(
-                nodes, edges, max_iters=min(hash_min_budget, max_iters),
-                checkpoint_every=checkpoint_every, frontier=frontier,
-            )
+            probe = hash_min_lp(nodes, edges, max_iters=min(hash_min_budget, max_iters))
             if probe.converged:
                 return probe
             # the probe is never wasted: after k hash-min rounds every node
@@ -656,9 +577,7 @@ def connected_components(
                 .distinct()
             )
             cnodes = plabels.select(F.col("label").alias("entity_key")).distinct()
-            star = alternating_star(
-                cnodes, cedges, max_iters=max(max_iters, 50), checkpoint_every=checkpoint_every
-            )
+            star = alternating_star(cnodes, cedges, max_iters=max(max_iters, 50))
             final = (
                 plabels.join(
                     star.labels.withColumnRenamed("label", "_final")
@@ -674,5 +593,5 @@ def connected_components(
                 path="hash_min+star",
             )
     if algorithm == "star":
-        return alternating_star(nodes, edges, max_iters=max(max_iters, 50), checkpoint_every=checkpoint_every)
-    return hash_min_lp(nodes, edges, max_iters=max_iters, checkpoint_every=checkpoint_every, frontier=frontier)
+        return alternating_star(nodes, edges, max_iters=max(max_iters, 50))
+    return hash_min_lp(nodes, edges, max_iters=max_iters)

@@ -99,7 +99,7 @@ def score_candidate_pairs(
             scorers = [r["scorer"] for r in pairs.select("scorer").distinct().collect()]
     jvm_only = set(scorers) <= {"token_jaccard"}
 
-    # explicit 1-row-per-entity contract (shared with the grouped path):
+    # explicit 1-row-per-entity contract (shared with build_entity_side):
     # duplicate entity rows would otherwise fan out one scored row per
     # duplicate; collapse deterministically to the MAX text. Skipped when the
     # caller proves uniqueness (every contributing source declares
@@ -333,113 +333,6 @@ def score_histogram_dense(scored_dense: DataFrame, block_dim: DataFrame, buckets
     return agg.join(block_dim, "bkey", "inner").select(
         "identifier_type", "identifier_value_norm", "pair_count", "score_histogram"
     )
-
-
-def score_candidate_pairs_grouped(
-    pairs: DataFrame,
-    entity_texts: DataFrame,
-    text_col: str = "match_text",
-    rule_meta: dict[str, tuple[float, str]] | None = None,
-    texts_unique: bool = False,
-) -> DataFrame:
-    """Block-grouped variant of :func:`score_candidate_pairs` for the
-    token_jaccard scorer (falls back is the caller's job for other scorers).
-
-    The classic path attaches both token arrays to EVERY pair row via two
-    equi-joins — the second join reshuffles the pair stream already carrying
-    one array, so each entity's tokens cross the wire once per pair it
-    appears in. Here the deduped pairs are cogrouped with a per-block ROSTER
-    of (entity, tokens): an entity's array ships once per block it has kept
-    pairs in (within an all-pairs block of size k that serves up to k·(k−1)/2
-    pairs), and a vectorized per-block kernel computes |∩| over Python int
-    sets. Scores are BIT-IDENTICAL to the classic path: both paths share the
-    `_int_tokens` representation (same xxhash64&0x7FFFFFFF token ints), the
-    same pair-dedup (MIN block provenance), and the same inner-join semantics
-    (a pair with an entity absent from entity_texts is dropped).
-
-    At 10^9+ entities this is also the shape that survives: the cogroup
-    shuffles pairs (skinny) + roster (arrays once per block-incidence), both
-    partitioned by block key — never the pair×array product."""
-    import pandas as pd
-
-    spark = pairs.sparkSession
-    assert rule_meta, "grouped scoring requires rule_meta"
-    uniq = pairs.groupBy("rule_id", "left_entity_key", "right_entity_key").agg(
-        F.min("identifier_type").alias("identifier_type"),
-        F.min("identifier_value_norm").alias("identifier_value_norm"),
-    )
-    capped = F.substring(F.col(text_col), 1, SCORING_TEXT_MAX_CHARS)
-    # same 1-row-per-entity contract as the classic path (skipped when the
-    # caller proves per-source uniqueness); NULL token arrays (NULL/absent
-    # match_text) are dropped from the roster so their pairs are skipped in
-    # the kernel — the classic path emits a NULL score for them which the
-    # ≥threshold filter drops, so edges are identical either way
-    if not texts_unique:
-        entity_texts = entity_texts.groupBy("entity_key").agg(F.max(text_col).alias(text_col))
-    toks = entity_texts.select("entity_key", _int_tokens(capped).alias("_toks")).filter(
-        F.col("_toks").isNotNull()
-    )
-    # the roster derives FROM uniq — alias the group keys to fresh attributes
-    # so the cogroup isn't an ambiguous self-join. Blocks are logically keyed
-    # by (identifier_type, identifier_value_norm); cogrouping on BOTH keeps
-    # same-valued blocks of different types in separate pandas groups.
-    roster = (
-        uniq.select(
-            F.col("identifier_type").alias("block_type"),
-            F.col("identifier_value_norm").alias("block_key"),
-            F.col("left_entity_key").alias("entity_key"),
-        )
-        .unionByName(
-            uniq.select(
-                F.col("identifier_type").alias("block_type"),
-                F.col("identifier_value_norm").alias("block_key"),
-                F.col("right_entity_key").alias("entity_key"),
-            )
-        )
-        .distinct()
-        .join(toks, "entity_key", "inner")
-    )
-
-    out_schema = (
-        "rule_id string, left_entity_key string, right_entity_key string, "
-        "identifier_type string, identifier_value_norm string, score double"
-    )
-
-    def _score_block(key, pairs_pdf, roster_pdf):
-        tok = {e: frozenset(t) for e, t in zip(roster_pdf["entity_key"], roster_pdf["_toks"])}
-        rows = {c: [] for c in (
-            "rule_id", "left_entity_key", "right_entity_key",
-            "identifier_type", "identifier_value_norm", "score",
-        )}
-        for rid, l, r, ityp, ival in zip(
-            pairs_pdf["rule_id"], pairs_pdf["left_entity_key"], pairs_pdf["right_entity_key"],
-            pairs_pdf["identifier_type"], pairs_pdf["identifier_value_norm"],
-        ):
-            lt = tok.get(l)
-            rt = tok.get(r)
-            if lt is None or rt is None:  # ≙ classic path's INNER text joins
-                continue
-            inter = len(lt & rt)
-            denom = len(lt) + len(rt) - inter
-            score = 1.0 if denom == 0 else inter / denom
-            rows["rule_id"].append(rid)
-            rows["left_entity_key"].append(l)
-            rows["right_entity_key"].append(r)
-            rows["identifier_type"].append(ityp)
-            rows["identifier_value_norm"].append(ival)
-            rows["score"].append(score)
-        return pd.DataFrame(rows)
-
-    scored = (
-        uniq.groupby("identifier_type", "identifier_value_norm")
-        .cogroup(roster.groupby("block_type", "block_key"))
-        .applyInPandas(_score_block, schema=out_schema)
-    )
-    meta_df = spark.createDataFrame(
-        [(rid, float(t), s) for rid, (t, s) in rule_meta.items()],
-        "rule_id string, threshold double, scorer string",
-    )
-    return scored.join(F.broadcast(meta_df), "rule_id", "inner")
 
 
 def scored_edges(scored_pairs: DataFrame, run_ts) -> DataFrame:

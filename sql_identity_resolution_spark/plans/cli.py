@@ -30,6 +30,12 @@ from sql_identity_resolution_spark.config import (
     SourceTrust,
 )
 
+# every top-level key load_config reads
+_CONFIG_KEYS = {
+    "warehouse", "sources", "rules", "mappings", "exclusions", "attributes", "trust",
+    "max_iters", "cc_algorithm", "emit_duplicate_text_pairs", "transcript_sources",
+}
+
 
 def load_config(path: str) -> EngineConfig:
     """JSON (or YAML when pyyaml is available) → EngineConfig.
@@ -49,6 +55,10 @@ def load_config(path: str) -> EngineConfig:
             raise ValueError(f"{path}: neither valid JSON nor YAML: {e}") from e
     if not isinstance(doc, dict) or "warehouse" not in doc:
         raise ValueError(f"{path}: config must be a mapping with a 'warehouse' key")
+    unknown = sorted(set(doc) - _CONFIG_KEYS)
+    if unknown:
+        # a typo or a removed option must not run silently on defaults
+        raise ValueError(f"{path}: unknown config keys {unknown}; known keys: {sorted(_CONFIG_KEYS)}")
 
     def build(cls, rows):
         return [cls(**r) for r in rows or []]
@@ -64,7 +74,6 @@ def load_config(path: str) -> EngineConfig:
         trust=build(SourceTrust, doc.get("trust")),
         max_iters=doc.get("max_iters", 30),
         cc_algorithm=doc.get("cc_algorithm", "auto"),
-        checkpoint_every=doc.get("checkpoint_every", 1),
     )
     # transcripts sources: {"table_id": ..., "path": ..., "lsh_threshold": ...}
     from sql_identity_resolution_spark.sources.transcripts import (

@@ -39,9 +39,20 @@ from sql_identity_resolution_spark.config import (
 _STRATEGY_MAP = {"SOURCE_PRIORITY": "TRUST_RECENCY", "MOST_RECENT": "MOST_RECENT"}
 
 
+# a bundle without these cannot define a run (no sources, no rules, or no
+# identifiers to match on); every other CSV is optional
+REQUIRED_CSVS = ("source_table", "rule", "identifier_mapping")
+
+
+class MetadataBundleError(ValueError):
+    """The metadata bundle directory or one of its required CSVs is missing."""
+
+
 def _read(dir_path: str, name: str) -> list[dict]:
     p = os.path.join(dir_path, f"{name}.csv")
     if not os.path.exists(p):
+        if name in REQUIRED_CSVS:
+            raise MetadataBundleError(f"metadata bundle {dir_path}: required {name}.csv is missing")
         return []
     with open(p, newline="") as f:
         return list(csv.DictReader(f))
@@ -64,7 +75,12 @@ def load_metadata_csv(
     readers: Optional[dict[str, Callable[[SparkSession], DataFrame]]] = None,
     **engine_kwargs,
 ) -> EngineConfig:
-    """Build an EngineConfig from a reference-format metadata CSV directory."""
+    """Build an EngineConfig from a reference-format metadata CSV directory.
+
+    Raises MetadataBundleError when ``dir_path`` is not a directory or a
+    required CSV (``REQUIRED_CSVS``) is missing."""
+    if not os.path.isdir(dir_path):
+        raise MetadataBundleError(f"metadata bundle directory not found: {dir_path}")
     paths = paths or {}
     readers = readers or {}
 

@@ -21,14 +21,14 @@ the view ``edges_current ∪ edges_new`` — "no production writes" made literal
 
 from __future__ import annotations
 
+import contextlib
 import json
-import os
 import time
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sql_identity_resolution_spark.config import EngineConfig
@@ -92,8 +92,6 @@ def _ckpt_count(df: DataFrame, name: str) -> tuple[DataFrame, int]:
     otherwise cost a second action (a scheduler barrier that prices in as
     parallelism-independent time: ~40 sequential actions per run is the
     largest Amdahl term the scaling bench sees). Returns (checkpointed, n)."""
-    from pyspark.sql import Observation
-
     obs = Observation(f"{name}_{uuid.uuid4().hex[:8]}")
     out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
     return out, int(obs.get["n"])
@@ -142,6 +140,83 @@ class RunResult:
     status: str = "SUCCESS"
 
 
+_EDGE_KEYS = [
+    "rule_id", "left_entity_key", "right_entity_key", "identifier_type", "identifier_value_norm",
+]
+
+
+@dataclass
+class _RunContext:
+    """Per-run state shared by the stage functions: identity, the RunResult
+    being filled, stage_metrics rows, the deferred commit queues, and the
+    frames each stage hands to the next."""
+
+    spark: SparkSession
+    mode: str
+    dry_run: bool
+    run_id: str
+    run_ts: datetime
+    run_sig: str
+    res: RunResult
+    t0: float
+    last_wm: dict
+    loaded: dict
+    # the delta IS the whole entity set: FULL, or INCR with no prior watermark
+    is_full: bool
+    stage_rows: list = field(default_factory=list)
+    # production writes deferred to the output_write flush (dry runs queue
+    # none): bucketed store commits, then driver-side state-row upserts that
+    # must land after every store published
+    pending_stores: list = field(default_factory=list)
+    pending_state: list = field(default_factory=list)
+    # observability appends — these land in dry runs too
+    pending_appends: list = field(default_factory=list)
+    # INCR: the exact identifier total is read back from the committed store
+    ids_count_from_pointer: bool = False
+    # frames handed between stages
+    entities_delta: DataFrame | None = None
+    wm_by_table: dict = field(default_factory=dict)
+    identifiers_delta: DataFrame | None = None
+    identifiers_filtered: DataFrame | None = None
+    members: DataFrame | None = None
+    sizes: DataFrame | None = None
+    scored_hist: DataFrame | None = None
+    edges_new: DataFrame | None = None
+    new_pairs: DataFrame | None = None
+    edges_current: DataFrame | None = None
+    labels: DataFrame | None = None
+    n_labels: int = 0
+    updates: DataFrame | None = None
+    csizes: DataFrame | None = None
+    conf: DataFrame | None = None
+
+    def queue(self, pending: list, entry: tuple) -> None:
+        """The dry-run gate on deferred production writes: a dry run queues
+        none (the only eager write, INCR's edge merge, is skipped by
+        _edge_merge)."""
+        if not self.dry_run:
+            pending.append(entry)
+
+    @contextlib.contextmanager
+    def stage(self, name: str):
+        """Time one pipeline stage and tag every Spark job fired inside it
+        with the stage name as job group (per-stage jobs / shuffle / task
+        time in the status store). Yields ``rows(n)``, which records the
+        stage's stage_metrics row."""
+        sc = self.spark.sparkContext
+        t = time.time()
+        sc.setJobGroup(name, f"idr stage {name}", False)
+
+        def rows(n):
+            self.stage_rows.append((self.run_id, name, int(n), round(time.time() - t, 3), self.run_ts))
+
+        try:
+            yield rows
+        finally:
+            sc.setJobGroup("", "", False)
+            self.res.stage_seconds[name] = round(time.time() - t, 3)
+
+
 class IDRPipeline:
     def __init__(self, spark: SparkSession, cfg: EngineConfig):
         self.spark = spark
@@ -152,20 +227,18 @@ class IDRPipeline:
             n_buckets=cfg.catalog_buckets,
             table_buckets=cfg.catalog_table_buckets or {},
         )
-        # fail-fast warm pass: analyze every source plan + config expression
-        # now (pure Catalyst analysis, zero Spark jobs) so construction
-        # surfaces schema typos early and the first run()'s preflight is
-        # Catalyst-warm (cold-JVM preflight measured 2.6-3.6 s, warm 0.2 s).
-        # Errors are swallowed — run() re-validates and raises the same
-        # named ValueError, keeping the documented error surface there.
-        if os.environ.get("SPARK_GRAFT_PREFLIGHT_WARM", "1") != "0":
-            try:
-                self.preflight(check_data=True, _warm=True)
-            except Exception:
-                pass
+        # warm pass: analyze every source plan + config expression now (pure
+        # Catalyst analysis, zero Spark jobs) so the first run()'s preflight
+        # is Catalyst-warm (cold-JVM preflight measured 2.6-3.6 s, warm
+        # 0.2 s). Errors are deferred to run(): its preflight re-validates
+        # and raises the same named ValueError.
+        try:
+            self._preflight(check_data=True, warm=True)
+        except Exception:
+            pass
 
     # ------------------------------------------------------------- preflight
-    def preflight(self, check_data: bool = True, _warm: bool = False) -> list[str]:
+    def preflight(self, check_data: bool = True) -> list[str]:
         """Config + data validation before any pipeline stage runs
         (≙ idr_run.py:126-171 / IDR_ValidateMetadata.py): every mapping needs
         an active rule; every active source must LOAD, carry its watermark
@@ -175,6 +248,9 @@ class IDRPipeline:
         source is a warning (legal, e.g. a quiet INCR slice).
 
         ``check_data=False`` skips the source loads (pure config check)."""
+        return self._preflight(check_data)
+
+    def _preflight(self, check_data: bool, warm: bool = False) -> list[str]:
         warnings: list[str] = []
         rule_types = {r.identifier_type for r in self.cfg.active_rules()}
         map_types = {m.identifier_type for m in self.cfg.mappings}
@@ -221,24 +297,24 @@ class IDRPipeline:
             # emptiness warning only for plain tables (a limit-1 parquet scan);
             # derived readers (e.g. transcript signatures) would pay their full
             # aggregation for a limit-1 — not worth it in preflight. The
-            # constructor's warm pass (_warm) skips it too: analysis only,
-            # zero Spark jobs.
-            if st.path is not None and not _warm and df.isEmpty():
+            # constructor's warm pass skips it too: analysis only, zero Spark
+            # jobs.
+            if st.path is not None and not warm and df.isEmpty():
                 warnings.append(f"source {st.table_id} is empty")
         return warnings
 
-    def _entity_texts(self, loaded: dict[str, DataFrame] | None = None) -> DataFrame | None:
+    def _entity_texts(self, loaded: dict[str, DataFrame] | None = None) -> tuple[DataFrame | None, bool]:
         """(entity_key, match_text) for similarity scoring — sources exposing a
-        match_text column (the transcripts signature source always does).
+        match_text column (the transcripts signature source always does) —
+        plus whether EVERY contributing source declares ``match_text_unique``.
 
-        Side effect: records on ``self._texts_unique`` whether EVERY
-        contributing source declares ``match_text_unique`` — entity_key is
-        table_id-prefixed so cross-source collisions are impossible, making
-        the union globally one-row-per-entity. The scoring paths use this to
-        skip their defensive per-entity text dedup (a corpus-wide
-        sort-aggregate over full texts). Holds for the INCR store view too:
-        prior store rows were written from the same declared-unique sources
-        and delta keys are anti-joined out before the union."""
+        entity_key is table_id-prefixed so cross-source collisions are
+        impossible, making the union globally one-row-per-entity when every
+        source declares it. The scoring paths use this to skip their
+        defensive per-entity text dedup (a corpus-wide sort-aggregate over
+        full texts). Holds for the INCR store view too: prior store rows were
+        written from the same declared-unique sources and delta keys are
+        anti-joined out before the union."""
         loaded = loaded or {}
         parts = []
         all_unique = True
@@ -256,51 +332,41 @@ class IDRPipeline:
                         F.col("match_text"),
                     )
                 )
-        self._texts_unique = all_unique
         if not parts:
-            return None
+            return None, all_unique
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        return out
+        return out, all_unique
 
     def _maintain_store(
         self,
+        c: _RunContext,
         name: str,
         delta_df,
         keys: list[str],
         bucket_col: str,
-        mode: str,
-        dry_run: bool,
         full_df_fn,
-        delta_is_full: bool = False,
         approx_rows: int | None = None,
     ) -> DataFrame:
         """Delta-maintained per-entity store. When the delta IS the full set
         (FULL mode, or INCR with no prior watermark) the store is overwritten
         (bucketed); otherwise delta entities' rows are replaced via bucketed
         delete+insert. Returns the post-merge VIEW immediately; the actual
-        commit is DEFERRED to the output_write stage (``_pending_stores``) so
+        commit is DEFERRED to the output_write stage (``pending_stores``) so
         the hot extract/edge stages never pay store IO — resume stays correct
         because run_state advances after the stores commit (an interrupted run
-        re-derives the same delta and re-merges idempotently). dry_run never
-        enqueues a commit."""
+        re-derives the same delta and re-merges idempotently)."""
         cat = self.catalog
-        if mode == "FULL" or delta_is_full or not cat.exists(name):
-            full_df = delta_df if (mode == "FULL" or delta_is_full) else full_df_fn()
-            if not dry_run:
-                self._pending_stores.append(
-                    (name, "overwrite", full_df, keys, bucket_col, approx_rows)
-                )
+        if c.is_full or not cat.exists(name):
+            full_df = delta_df if c.is_full else full_df_fn()
+            c.queue(c.pending_stores, (name, "overwrite", full_df, keys, bucket_col, approx_rows))
             return full_df
         prior = cat.read(name)
         view = prior.join(delta_df.select(*keys).distinct(), keys, "left_anti").unionByName(
             delta_df.select(*prior.columns)
         )
-        if not dry_run:
-            self._pending_stores.append(
-                (name, "delete_insert", delta_df, keys, bucket_col, approx_rows)
-            )
+        c.queue(c.pending_stores, (name, "delete_insert", delta_df, keys, bucket_col, approx_rows))
         return view
 
     # ------------------------------------------------------------------- run
@@ -318,90 +384,84 @@ class IDRPipeline:
     def run(self, mode: str = "FULL", dry_run: bool = False, run_id: str | None = None) -> RunResult:
         spark, cfg, cat = self.spark, self.cfg, self.catalog
         mode = mode.upper()
-        run_sig = cfg.match_signature()
         run_id = run_id or f"run_{datetime.now(timezone.utc).strftime('%Y%m%d%H%M%S')}_{uuid.uuid4().hex[:8]}"
         run_ts = datetime.now(timezone.utc).replace(tzinfo=None)
         res = RunResult(run_id=run_id, mode=mode, dry_run=dry_run)
         cat.last_commit_stats.clear()  # stats are per-run
         t0 = time.time()
-        stage_rows: list[tuple] = []
-        self._pending_stores: list[tuple] = []
-        self._pending_appends: list[tuple] = []
-        self._ids_count_from_pointer = False
-        self._texts_unique = False
-
-        def stage(name):
-            class _S:
-                def __enter__(s):
-                    s.t = time.time()
-                    # tag every Spark job fired inside this stage so the UI /
-                    # REST API attributes shuffle bytes + task time per stage
-                    spark.sparkContext.setJobGroup(name, f"idr stage {name}", False)
-                    return s
-
-                def __exit__(s, *a):
-                    spark.sparkContext.setJobGroup("", "", False)
-                    res.stage_seconds[name] = round(time.time() - s.t, 3)
-
-                def rows(s, n):
-                    stage_rows.append((run_id, name, int(n), round(time.time() - s.t, 3), run_ts))
-
-            return _S()
-
         res.warnings.extend(self.preflight())
 
-        # -------- watermarks (S2/S9) — driver-side pointer read, zero jobs
-        # (run_state is one row per source; the Spark read+collect it replaces
-        # was a fixed scheduler round-trip at the head of every run)
+        # watermarks (S2/S9) — driver-side pointer read, zero jobs (run_state
+        # is one row per source; the Spark read+collect it replaces was a
+        # fixed scheduler round-trip at the head of every run)
         last_wm = {
             r["table_id"]: r["last_watermark_value"]
             for r in (cat.read_rows(T_RUN_STATE) or [])
         }
-
-        # load each source exactly once (derived sources are expensive);
-        # INCR loads only the delta slice — the stores supply the rest
-        loaded = extract.load_sources(spark, cfg, mode, last_wm)
-        delta_is_full = mode == "FULL" or not any(
-            last_wm.get(st.table_id) is not None for st in cfg.sources if st.is_active
+        c = _RunContext(
+            spark=spark, mode=mode, dry_run=dry_run, run_id=run_id, run_ts=run_ts,
+            run_sig=cfg.match_signature(), res=res, t0=t0, last_wm=last_wm,
+            # load each source exactly once (derived sources are expensive);
+            # INCR loads only the delta slice — the stores supply the rest
+            loaded=extract.load_sources(spark, cfg, mode, last_wm),
+            is_full=mode == "FULL" or not any(
+                last_wm.get(st.table_id) is not None for st in cfg.sources if st.is_active
+            ),
         )
+        stages = [
+            self._entity_extraction,       # stage 10
+            self._identifier_extraction,   # stage 11 + exclusions + identifier store
+            self._edge_building,           # stage 20
+            self._edge_merge,              # S5 (INCR) / FULL deferral / dry-run view
+            self._label_propagation,       # stages 30/31
+            self._membership_update,       # stages 40/41/42
+            self._golden_profile,          # stage 50
+            self._output_write,            # stages 60/70
+        ]
+        if dry_run:
+            stages.append(self._dry_run_diff)  # idr_run.py:705-746
+        for stage_fn in stages:
+            stage_fn(c)
+        return self._finalize(c)
 
-        # -------- entities delta (stage 10)
-        with stage("entity_extraction") as s:
-            entities_delta = extract.build_entities_delta(spark, cfg, run_id, mode, last_wm, loaded)
+    # ---------------------------------------------------------------- stages
+    def _entity_extraction(self, c: _RunContext) -> None:
+        cfg = self.cfg
+        with c.stage("entity_extraction") as rows:
+            entities_delta = extract.build_entities_delta(
+                self.spark, cfg, c.run_id, c.mode, c.last_wm, c.loaded
+            )
             # ONE checkpoint job carries the row count AND the per-source max
             # watermark (the run_state advance) via a single Observation — the
             # separate end-of-run groupBy(table_id).max() job is gone
-            from pyspark.sql import Observation
-
             active_ids = [st.table_id for st in cfg.sources if st.is_active]
             obs = Observation(f"entities_{uuid.uuid4().hex[:8]}")
             aggs = [F.count(F.lit(1)).alias("n")] + [
                 F.max(F.when(F.col("table_id") == tid, F.col("watermark_value"))).alias(f"wm_{i}")
                 for i, tid in enumerate(active_ids)
             ]
-            entities_delta = entities_delta.observe(obs, *aggs).localCheckpoint(eager=True)
+            c.entities_delta = entities_delta.observe(obs, *aggs).localCheckpoint(eager=True)
             vals = obs.get
-            res.entities_processed = int(vals["n"])
-            wm_by_table = {tid: vals[f"wm_{i}"] for i, tid in enumerate(active_ids)}
-            s.rows(res.entities_processed)
+            c.res.entities_processed = int(vals["n"])
+            c.wm_by_table = {tid: vals[f"wm_{i}"] for i, tid in enumerate(active_ids)}
+            rows(c.res.entities_processed)
 
-        # -------- identifiers (stage 11) + exclusions + identifier store
-        with stage("identifier_extraction") as s:
-            identifiers_delta = extract.extract_identifiers(spark, cfg, mode, last_wm, loaded)
+    def _identifier_extraction(self, c: _RunContext) -> None:
+        spark, cfg, res = self.spark, self.cfg, c.res
+        with c.stage("identifier_extraction") as rows:
+            identifiers_delta = extract.extract_identifiers(spark, cfg, c.mode, c.last_wm, c.loaded)
             # excluded-count via Observation on the anti-join INPUT: one
             # extraction job total — a second count() would re-run the whole
             # (UDF-bearing) extraction just for a metric. In INCR this counts
             # the delta slice (the only rows extracted this run).
             excl_obs = None
             if cfg.exclusions:
-                from pyspark.sql import Observation
-
                 excl_obs = Observation("exclusion_input")
                 identifiers_delta = identifiers_delta.observe(
                     excl_obs, F.count(F.lit(1)).alias("n_input")
                 )
             identifiers_delta = extract.apply_exclusions(spark, identifiers_delta, cfg)
-            if mode == "FULL" or delta_is_full:
+            if c.is_full:
                 # FULL: every identifier row is about to become a blocking-join
                 # member, so partition the ONE identifiers materialization on
                 # the block key here — group-stats, anchor join and candidate
@@ -423,14 +483,12 @@ class IDRPipeline:
             # entities' rows (delete+insert on entity key, bucketed) — the
             # blocking join below consumes the FULL store without ever
             # re-deriving identifiers for unchanged entities.
-            identifiers_filtered = self._maintain_store(
+            c.identifiers_filtered = self._maintain_store(
+                c,
                 T_IDENTIFIERS,
                 identifiers_delta,
                 keys=["table_id", "entity_key"],
                 bucket_col="entity_key",
-                mode=mode,
-                dry_run=dry_run,
-                delta_is_full=delta_is_full,
                 approx_rows=n_delta_ids,
                 full_df_fn=lambda: extract.apply_exclusions(
                     spark,
@@ -438,6 +496,7 @@ class IDRPipeline:
                     cfg,
                 ),
             )
+            c.identifiers_delta = identifiers_delta
             # FULL / first-run: the store view IS the (already counted) delta.
             # INCR: the post-merge total isn't knowable until the store flush
             # commits (replaced-row count lives in the rewritten buckets), so
@@ -445,12 +504,13 @@ class IDRPipeline:
             # from pointer metadata after the flush — zero table-scan jobs on
             # the INCR critical path either way.
             res.identifiers_extracted = n_delta_ids
-            self._ids_count_from_pointer = identifiers_filtered is not identifiers_delta
-            s.rows(n_delta_ids)
+            c.ids_count_from_pointer = c.identifiers_filtered is not identifiers_delta
+            rows(n_delta_ids)
 
-        # -------- edges (stage 20)
-        with stage("edge_building") as s:
-            if mode == "FULL" or delta_is_full:
+    def _edge_building(self, c: _RunContext) -> None:
+        spark, cfg, res = self.spark, self.cfg, c.res
+        with c.stage("edge_building") as rows:
+            if c.is_full:
                 # FULL: every entity is a delta entity, so delta-values ∘
                 # members-for-values is the identity on non-null identifiers —
                 # skip the 2 corpus-sized semi-joins + distinct the INCR shape
@@ -460,21 +520,22 @@ class IDRPipeline:
                 # zero-exchange in-memory scan of it, and every consumer below
                 # (group stats, anchor join, candidate pairs) inherits the
                 # partitioning; no second materialization needed
-                members = identifiers_filtered.filter(
+                members = c.identifiers_filtered.filter(
                     F.col("identifier_value_norm").isNotNull()
                 ).select("table_id", "entity_key", *blocking.BLOCK_KEY)
             else:
                 delta_values = blocking.delta_identifier_values(
-                    identifiers_filtered, entities_delta
+                    c.identifiers_filtered, c.entities_delta
                 )
                 members = blocking.members_for_delta_values(
-                    identifiers_filtered, delta_values, cfg.salt_buckets
+                    c.identifiers_filtered, delta_values, cfg.salt_buckets
                 )
                 # INCR: materialize ONCE, hash-partitioned on the block key:
                 # group_sizes, anchor_edges and candidate_pairs all consume
                 # members on this key and reuse the exchange instead of
                 # recomputing the blocking join
                 members = members.repartition(*blocking.BLOCK_KEY).localCheckpoint(eager=True)
+            c.members = members
             # singleton blocks (one member = a unique identifier value — the
             # overwhelming majority of distinct values at scale) produce no
             # pairs, no edges and no skip audit: drop them BEFORE the stats
@@ -488,8 +549,6 @@ class IDRPipeline:
             # driver metadata) — the common all-valid run pays ZERO extra
             # jobs; the audit frame itself is only built (and sample keys
             # only sorted) on the rare count>0 path
-            from pyspark.sql import Observation
-
             max_by_type = F.lit(None).cast("int")
             for r in cfg.active_rules():
                 max_by_type = F.when(
@@ -497,7 +556,7 @@ class IDRPipeline:
                     F.lit(int(r.max_group_size or blocking.DEFAULT_MAX_GROUP_SIZE)),
                 ).otherwise(max_by_type)
             skip_obs = Observation(f"skipped_{uuid.uuid4().hex[:8]}")
-            sizes = (
+            c.sizes = (
                 blocking.group_stats(members)
                 .filter(F.col("group_size") >= 2)
                 .observe(
@@ -509,7 +568,7 @@ class IDRPipeline:
                 .localCheckpoint(eager=True)
             )
             res.groups_skipped = int(skip_obs.get["n_skipped"] or 0)
-            valid, skipped = blocking.split_by_group_size(spark, cfg, sizes, run_id)
+            valid, skipped = blocking.split_by_group_size(spark, cfg, c.sizes, c.run_id)
             if res.groups_skipped:
                 res.warnings.append(
                     f"{res.groups_skipped} identifier groups skipped (exceeded max_group_size)"
@@ -522,304 +581,262 @@ class IDRPipeline:
                     .select(*skipped_cols)
                     .localCheckpoint(eager=True)
                 )
-                # the physical append joins the output_write flush pool
-                # instead of paying a serial write job on the hot edge stage
-                self._pending_appends.append((T_SKIPPED, skipped))
-            else:
-                # nothing skipped: append the (empty, schema-bearing) audit
-                # frame from the flush pool — no job here either way
-                self._pending_appends.append((T_SKIPPED, skipped))
+            # the physical append joins the output_write flush pool instead of
+            # paying a serial write job on the hot edge stage; with nothing
+            # skipped it appends the (empty, schema-bearing) audit frame
+            c.pending_appends.append((T_SKIPPED, skipped))
 
-            edges_exact = blocking.anchor_edges(valid, members, run_ts, salt_buckets=cfg.salt_buckets)
+            edges_new = blocking.anchor_edges(valid, members, c.run_ts, salt_buckets=cfg.salt_buckets)
+            if any(r.match_strategy == "SCORED" for r in cfg.active_rules()):
+                edges_new = edges_new.unionByName(self._scored_edges(c, valid))
 
-            scored_pairs = None
-            scored_hist = None  # (type, value, pair_count, score_histogram) for lineage
-            has_scored = any(r.match_strategy == "SCORED" for r in cfg.active_rules())
-            if has_scored:
-                texts_delta = self._entity_texts(loaded)
-                if texts_delta is None:
-                    raise ValueError("SCORED rules configured but no source exposes match_text")
-                # candidate pairs reference EXISTING members of delta blocks —
-                # their match_text comes from the store, not a corpus re-read
-                texts = self._maintain_store(
-                    T_ENTITY_TEXTS,
-                    texts_delta,
-                    keys=["entity_key"],
-                    bucket_col="entity_key",
-                    mode=mode,
-                    dry_run=dry_run,
-                    delta_is_full=delta_is_full,
-                    approx_rows=res.entities_processed,
-                    full_df_fn=lambda: self._entity_texts(extract.load_sources(spark, cfg)),
+            c.edges_new, res.edges_created = _ckpt_count(edges_new, "edges_new")
+            rows(res.edges_created)
+
+    def _scored_edges(self, c: _RunContext, valid: DataFrame) -> DataFrame:
+        """SCORED-rule edges of the edge_building stage: candidate pairs of
+        the valid SCORED blocks, scored and thresholded. Sets
+        ``candidate_pairs_scored`` and the per-block score histogram."""
+        spark, cfg, cat, res = self.spark, self.cfg, self.catalog, c.res
+        members = c.members
+        texts_delta, texts_unique = self._entity_texts(c.loaded)
+        if texts_delta is None:
+            raise ValueError("SCORED rules configured but no source exposes match_text")
+        # candidate pairs reference EXISTING members of delta blocks —
+        # their match_text comes from the store, not a corpus re-read
+        texts = self._maintain_store(
+            c,
+            T_ENTITY_TEXTS,
+            texts_delta,
+            keys=["entity_key"],
+            bucket_col="entity_key",
+            approx_rows=res.entities_processed,
+            full_df_fn=lambda: self._entity_texts(extract.load_sources(spark, cfg))[0],
+        )
+        scored_rules = [r for r in cfg.active_rules() if r.match_strategy == "SCORED"]
+        scored_types = [r.identifier_type for r in scored_rules]
+        scorer_names = sorted({r.scorer for r in scored_rules})
+        rule_meta = {r.rule_id: (float(r.threshold), r.scorer) for r in scored_rules}
+        # entity-count gate for broadcasting the tokenized entity side
+        # into the scoring join (the pair stream then never reshuffles
+        # with token arrays). FULL already knows the count; INCR
+        # derives an upper bound from catalog pointer metadata (prior
+        # store rows + this delta's entities) — zero extra jobs, and
+        # overestimating can only withhold a broadcast, never force
+        # an oversized one. Exact only when every active source
+        # exposes match_text AND one text row per entity (the
+        # transcripts signature source declares both via
+        # match_text_unique; undeclared sources get the defensive
+        # dedup agg inside the scoring builders instead).
+        if c.is_full:
+            n_texts = res.entities_processed
+        else:
+            n_texts = (cat.row_count(T_ENTITY_TEXTS) or 0) + res.entities_processed
+        broadcast_texts = n_texts <= cfg.score_broadcast_max_entities
+        # score_dense=None → regime-adaptive: dense on real
+        # multi-JVM masters (serialized shuffle — the A/B winner
+        # there), classic on thread-local masters (shared heap)
+        score_dense = cfg.score_dense
+        if score_dense is None:
+            score_dense = _dense_default_for_master(spark.sparkContext.master)
+        use_dense = score_dense and set(scorer_names) <= {"token_jaccard"}
+        # INCR: only delta-impacted block members ever get scored, so
+        # tokenize/broadcast just THEIR texts (semi-join) — the
+        # scoring-side text build is ∝ impacted set, not corpus (it
+        # was the largest O(corpus) cost left on the INCR path:
+        # classic scoring tokenized and broadcast the WHOLE store
+        # every micro-batch). Candidate pairs only carry entity keys
+        # from `members`, and every text attach is an INNER equi-join
+        # on those keys, so the restriction is exact. FULL: every
+        # entity is a member; skip the pointless semi-join.
+        scoring_texts = texts
+        if not c.is_full:
+            member_keys = (
+                members.filter(F.col("identifier_type").isin(scored_types))
+                .select("entity_key")
+                .distinct()
+            )
+            # the store read itself is bucket-PRUNED to the impacted
+            # members' buckets (the text column is the widest in the
+            # warehouse — a full-store scan per micro-batch would be
+            # the INCR path's largest IO term at corpus scale); delta
+            # rows then replace prior rows exactly like the
+            # _maintain_store view
+            prior_slice = cat.read_slice_for(
+                T_ENTITY_TEXTS, member_keys, "entity_key", texts_delta.schema
+            )
+            scoring_texts = (
+                prior_slice.join(
+                    texts_delta.select("entity_key").distinct(), "entity_key", "left_anti"
                 )
-                scored_rules = [r for r in cfg.active_rules() if r.match_strategy == "SCORED"]
-                scored_types = [r.identifier_type for r in scored_rules]
-                scorer_names = sorted({r.scorer for r in scored_rules})
-                rule_meta = {r.rule_id: (float(r.threshold), r.scorer) for r in scored_rules}
-                # entity-count gate for broadcasting the tokenized entity side
-                # into the scoring join (the pair stream then never reshuffles
-                # with token arrays). FULL already knows the count; INCR
-                # derives an upper bound from catalog pointer metadata (prior
-                # store rows + this delta's entities) — zero extra jobs, and
-                # overestimating can only withhold a broadcast, never force
-                # an oversized one. Exact only when every active source
-                # exposes match_text AND one text row per entity (the
-                # transcripts signature source declares both via
-                # match_text_unique; undeclared sources get the defensive
-                # dedup agg inside the scoring builders instead).
-                if mode == "FULL" or delta_is_full:
-                    n_texts = res.entities_processed
-                else:
-                    n_texts = (cat.row_count(T_ENTITY_TEXTS) or 0) + res.entities_processed
-                broadcast_texts = n_texts <= cfg.score_broadcast_max_entities
-                # score_dense=None → regime-adaptive: dense on real
-                # multi-JVM masters (serialized shuffle — the A/B winner
-                # there), classic on thread-local masters (shared heap)
-                score_dense = cfg.score_dense
-                if score_dense is None:
-                    score_dense = _dense_default_for_master(spark.sparkContext.master)
-                use_dense = score_dense and not cfg.score_grouped and set(scorer_names) <= {"token_jaccard"}
-                dup_scored = None
-                # INCR: only delta-impacted block members ever get scored, so
-                # tokenize/broadcast just THEIR texts (semi-join) — the
-                # scoring-side text build is ∝ impacted set, not corpus (it
-                # was the largest O(corpus) cost left on the INCR path:
-                # classic scoring tokenized and broadcast the WHOLE store
-                # every micro-batch). Candidate pairs only carry entity keys
-                # from `members`, and every text attach is an INNER equi-join
-                # on those keys, so the restriction is exact. FULL: every
-                # entity is a member; skip the pointless semi-join.
-                scoring_texts = texts
-                if mode == "INCR" and not delta_is_full:
-                    member_keys = (
-                        members.filter(F.col("identifier_type").isin(scored_types))
-                        .select("entity_key")
-                        .distinct()
-                    )
-                    # the store read itself is bucket-PRUNED to the impacted
-                    # members' buckets (the text column is the widest in the
-                    # warehouse — a full-store scan per micro-batch would be
-                    # the INCR path's largest IO term at corpus scale); delta
-                    # rows then replace prior rows exactly like the
-                    # _maintain_store view
-                    prior_slice = cat.read_slice_for(
-                        T_ENTITY_TEXTS, member_keys, "entity_key", texts_delta.schema
-                    )
-                    scoring_texts = (
-                        prior_slice.join(
-                            texts_delta.select("entity_key").distinct(), "entity_key", "left_anti"
-                        )
-                        .unionByName(texts_delta.select(*prior_slice.columns))
-                        .join(member_keys, "entity_key", "leftsemi")
-                    )
-                if use_dense:
-                    # ---- dense long-id path: fixed-width shuffles
-                    entity_side = scoring.build_entity_side(
-                        scoring_texts, texts_unique=self._texts_unique
-                    )
-                    if cfg.scored_dedup_identical_text:
-                        members_e = blocking.dedup_scored_members_dense(
-                            members, entity_side, scored_types
-                        )
-                    else:
-                        members_e = blocking.members_dense(members, entity_side, scored_types)
-                    # candidate generation joins members_e against itself (the
-                    # a-side and b-side of the block self-join): lazy
-                    # localCheckpoint = one evaluation of the member⋈entity
-                    # join + dedup agg, no extra action, and a leaf plan for
-                    # both references
-                    members_e = members_e.localCheckpoint(eager=False)
-                    rid_map = scoring.rid_map_df(spark, scored_rules)
-                    pairs_dense = blocking.candidate_pairs_dense(
-                        valid,
-                        members_e,
-                        rid_map,
-                        entity_side,
-                        salt_buckets=cfg.salt_buckets,
-                        all_pairs_max=cfg.scored_all_pairs_max,
-                    )
-                    scored_dense = scoring.score_pairs_dense(
-                        pairs_dense, entity_side, rid_map, broadcast_toks=broadcast_texts
-                    )
-                    scored_dense, res.candidate_pairs_scored = _ckpt_count(
-                        scored_dense, "scored_pairs"
-                    )
-                    block_dim = scoring.block_dim_df(
-                        valid.filter(F.col("match_strategy") == "SCORED")
-                    )
-                    scored_hist = scoring.score_histogram_dense(scored_dense, block_dim)
-                    edges_scored = scoring.scored_edges_dense(
-                        scored_dense, entity_side, block_dim, rid_map, run_ts,
-                        broadcast_dims=broadcast_texts,
-                    )
-                    # dup-pairs complement needs GLOBAL fingerprints (a delta
-                    # entity's identical-text representative may live outside
-                    # the impacted blocks for non-signature sources) — lazy
-                    # projection over the full text view, only materialized
-                    # when emit_duplicate_text_pairs is on; ≙ classic path
-                    entity_fp = texts.select(
-                        "entity_key",
-                        F.when(
-                            F.length(F.trim(F.col("match_text"))) > 0,
-                            F.xxhash64("match_text"),
-                        ).alias("fp"),
-                    )
-                else:
-                    # ---- classic string path: grouped cogroup or non-jaccard scorers
-                    scoring_members = members
-                    entity_fp = None
-                    if cfg.scored_dedup_identical_text:
-                        # scoring-payload fingerprint: empty texts stay unique
-                        # (an empty-vs-empty pair is not evidence of identity).
-                        # Member dedup only needs fingerprints for IMPACTED
-                        # members (inner join) — hash the scoped text set; the
-                        # dup-pairs complement below needs GLOBAL fingerprints
-                        # (a delta entity's representative may live outside
-                        # the impacted blocks) — that lazy projection is built
-                        # over the full view and only ever materialized when
-                        # emit_duplicate_text_pairs is on (≙ dense branch).
-                        def _fp(tdf):
-                            return tdf.select(
-                                "entity_key",
-                                F.when(
-                                    F.length(F.trim(F.col("match_text"))) > 0,
-                                    F.xxhash64("match_text"),
-                                ).alias("fp"),
-                            )
+                .unionByName(texts_delta.select(*prior_slice.columns))
+                .join(member_keys, "entity_key", "leftsemi")
+            )
+        # identical-text fingerprint (empty texts stay unique: an
+        # empty-vs-empty pair is not evidence of identity). The dup-pairs
+        # complement below needs GLOBAL fingerprints (a delta entity's
+        # identical-text representative may live outside the impacted
+        # blocks for non-signature sources) — a lazy projection over the
+        # full text view, only materialized when emit_duplicate_text_pairs
+        # is on.
+        def _fp(tdf):
+            return tdf.select(
+                "entity_key",
+                F.when(
+                    F.length(F.trim(F.col("match_text"))) > 0,
+                    F.xxhash64("match_text"),
+                ).alias("fp"),
+            )
 
-                        entity_fp = _fp(texts)
-                        scoring_members = blocking.dedup_scored_members(
-                            members, _fp(scoring_texts), scored_types
-                        )
-                    pairs = blocking.candidate_pairs(
-                        valid,
-                        scoring_members,
-                        salt_buckets=cfg.salt_buckets,
-                        all_pairs_max=cfg.scored_all_pairs_max,
-                    )
-                    if cfg.score_grouped and set(scorer_names) <= {"token_jaccard"}:
-                        scored_pairs = scoring.score_candidate_pairs_grouped(
-                            pairs, scoring_texts, rule_meta=rule_meta, texts_unique=self._texts_unique
-                        )
-                    else:
-                        scored_pairs = scoring.score_candidate_pairs(
-                            pairs,
-                            scoring_texts,
-                            scorers=scorer_names,
-                            rule_meta=rule_meta,
-                            broadcast_texts=broadcast_texts,
-                            texts_unique=self._texts_unique,
-                        )
-                    scored_pairs, res.candidate_pairs_scored = _ckpt_count(
-                        scored_pairs, "scored_pairs"
-                    )
-                    scored_hist = scoring.score_histogram(scored_pairs)
-                    edges_scored = scoring.scored_edges(scored_pairs, run_ts)
-                if cfg.scored_dedup_identical_text and cfg.emit_duplicate_text_pairs and entity_fp is not None:
-                    # linear complement of the dedup: every dropped duplicate
-                    # links to its fingerprint group's representative with a
-                    # pre-scored 1.0 pair (identical payload ⟹ score 1.0 —
-                    # skipping the scorer is exact, not an approximation)
-                    dup_rule = min(scored_rules, key=lambda r: r.priority)
-                    dup_scored = blocking.duplicate_text_pairs(
-                        entity_fp, delta_keys=entities_delta
-                    ).select(
-                        F.lit(dup_rule.rule_id).alias("rule_id"),
-                        "left_entity_key",
-                        "right_entity_key",
-                        F.lit(dup_rule.identifier_type).alias("identifier_type"),
-                        F.concat(F.lit("dup:"), F.hex("fp")).alias("identifier_value_norm"),
-                        F.lit(float(dup_rule.threshold)).alias("threshold"),
-                        F.lit(dup_rule.scorer).alias("scorer"),
-                        F.lit(1.0).alias("score"),
-                    )
-                    dup_scored, n_dup = _ckpt_count(dup_scored, "dup_pairs")
-                    res.candidate_pairs_scored += n_dup
-                    scored_hist = scored_hist.unionByName(scoring.score_histogram(dup_scored))
-                    edges_scored = edges_scored.unionByName(
-                        scoring.scored_edges(dup_scored, run_ts)
-                    )
-                edges_new = edges_exact.unionByName(edges_scored)
-            else:
-                edges_new = edges_exact
+        if use_dense:
+            # ---- dense long-id path: fixed-width shuffles
+            entity_side = scoring.build_entity_side(scoring_texts, texts_unique=texts_unique)
+            members_e = blocking.dedup_scored_members_dense(members, entity_side, scored_types)
+            # candidate generation joins members_e against itself (the
+            # a-side and b-side of the block self-join): lazy
+            # localCheckpoint = one evaluation of the member⋈entity
+            # join + dedup agg, no extra action, and a leaf plan for
+            # both references
+            members_e = members_e.localCheckpoint(eager=False)
+            rid_map = scoring.rid_map_df(spark, scored_rules)
+            pairs_dense = blocking.candidate_pairs_dense(
+                valid,
+                members_e,
+                rid_map,
+                entity_side,
+                salt_buckets=cfg.salt_buckets,
+                all_pairs_max=cfg.scored_all_pairs_max,
+            )
+            scored_dense = scoring.score_pairs_dense(
+                pairs_dense, entity_side, rid_map, broadcast_toks=broadcast_texts
+            )
+            scored_dense, res.candidate_pairs_scored = _ckpt_count(scored_dense, "scored_pairs")
+            block_dim = scoring.block_dim_df(valid.filter(F.col("match_strategy") == "SCORED"))
+            scored_hist = scoring.score_histogram_dense(scored_dense, block_dim)
+            edges_scored = scoring.scored_edges_dense(
+                scored_dense, entity_side, block_dim, rid_map, c.run_ts,
+                broadcast_dims=broadcast_texts,
+            )
+        else:
+            # ---- classic string path (any scorer). Member dedup only
+            # needs fingerprints for IMPACTED members (inner join) —
+            # hash the scoped text set
+            pairs = blocking.candidate_pairs(
+                valid,
+                blocking.dedup_scored_members(members, _fp(scoring_texts), scored_types),
+                salt_buckets=cfg.salt_buckets,
+                all_pairs_max=cfg.scored_all_pairs_max,
+            )
+            scored_pairs = scoring.score_candidate_pairs(
+                pairs,
+                scoring_texts,
+                scorers=scorer_names,
+                rule_meta=rule_meta,
+                broadcast_texts=broadcast_texts,
+                texts_unique=texts_unique,
+            )
+            scored_pairs, res.candidate_pairs_scored = _ckpt_count(scored_pairs, "scored_pairs")
+            scored_hist = scoring.score_histogram(scored_pairs)
+            edges_scored = scoring.scored_edges(scored_pairs, c.run_ts)
+        if cfg.emit_duplicate_text_pairs:
+            # linear complement of the dedup: every dropped duplicate
+            # links to its fingerprint group's representative with a
+            # pre-scored 1.0 pair (identical payload ⟹ score 1.0 —
+            # skipping the scorer is exact, not an approximation)
+            dup_rule = min(scored_rules, key=lambda r: r.priority)
+            dup_scored = blocking.duplicate_text_pairs(
+                _fp(texts), delta_keys=c.entities_delta
+            ).select(
+                F.lit(dup_rule.rule_id).alias("rule_id"),
+                "left_entity_key",
+                "right_entity_key",
+                F.lit(dup_rule.identifier_type).alias("identifier_type"),
+                F.concat(F.lit("dup:"), F.hex("fp")).alias("identifier_value_norm"),
+                F.lit(float(dup_rule.threshold)).alias("threshold"),
+                F.lit(dup_rule.scorer).alias("scorer"),
+                F.lit(1.0).alias("score"),
+            )
+            dup_scored, n_dup = _ckpt_count(dup_scored, "dup_pairs")
+            res.candidate_pairs_scored += n_dup
+            scored_hist = scored_hist.unionByName(scoring.score_histogram(dup_scored))
+            edges_scored = edges_scored.unionByName(scoring.scored_edges(dup_scored, c.run_ts))
+        c.scored_hist = scored_hist
+        return edges_scored
 
-            edges_new, res.edges_created = _ckpt_count(edges_new, "edges_new")
-            s.rows(res.edges_created)
-
-        # -------- merge edges (S5) / dry-run view
-        edge_keys = [
-            "rule_id", "left_entity_key", "right_entity_key", "identifier_type", "identifier_value_norm",
-        ]
-        edges_schema = schema_str(_EDGE_SCHEMA, spark)
-        if mode == "FULL" and not dry_run:
+    def _edge_merge(self, c: _RunContext) -> None:
+        """Merge edges (S5). FULL defers the overwrite to the output_write
+        flush; INCR merges eagerly in its own ``edge_merge`` stage; a dry run
+        clusters over the view ``edges_current ∪ edges_new`` instead."""
+        spark, cfg, cat, res = self.spark, self.cfg, self.catalog, c.res
+        if c.mode == "FULL":
             # the checkpointed edges ARE the post-overwrite content: consume
             # them in-memory (LP reads the edge set 2-3×; a parquet write +
             # re-read here puts ~2 table scans back on the critical path) and
             # defer the physical overwrite to the output_write batch flush.
             # Resume-safe: run_state advances only after the flush, so an
             # interrupted run re-derives the same edges idempotently.
-            self._pending_stores.append(
-                (T_EDGES, "overwrite", edges_new, edge_keys, "left_entity_key", res.edges_created)
+            c.queue(c.pending_stores, (
+                T_EDGES, "overwrite", c.edges_new, _EDGE_KEYS, "left_entity_key", res.edges_created,
+            ))
+            c.edges_current = c.edges_new
+            return
+        # connectivity changes only where a pair's endpoints are NOT
+        # already co-clustered: re-derived edges of re-signed watermark-
+        # boundary entities (and new rule-edges inside an existing
+        # cluster) only refresh last_seen_ts in the MERGE — they must not
+        # drag their whole (possibly huge) clusters into the recluster.
+        # Testing membership rather than the edge store is also
+        # CRASH-SAFE: a prior run that merged edges but failed before
+        # publishing membership leaves those pairs non-co-clustered, so
+        # the re-run still reclusters them (an edge-store anti-join would
+        # see them as "already known" and strand them unclustered).
+        # Bucket-pruned membership lookup + delta-sized joins,
+        # checkpointed before any store pointer moves.
+        c.new_pairs = _graph_changing_pairs(
+            c.edges_new,
+            cat.read_slice_for(
+                T_MEMBERSHIP,
+                graph.impacted_nodes(c.edges_new),
+                "entity_key",
+                schema_str(_MEMBERSHIP_SCHEMA, spark),
+            ),
+        ).localCheckpoint(eager=True)
+        if c.dry_run:  # no production writes: cluster over the union view
+            prior = cat.read(T_EDGES, schema_str(_EDGE_SCHEMA, spark))
+            c.edges_current = prior.unionByName(c.edges_new).dropDuplicates(_EDGE_KEYS)
+            return
+        # eager (unlike FULL's deferred overwrite): LP + confidence read
+        # the post-merge store next. Timed as its own stage — at corpus
+        # scale this commit, not the scoring, caps INCR latency; merge-on-
+        # read keeps it O(delta) (see sources/catalog.py merge-on-read).
+        with c.stage("edge_merge") as rows:
+            cat.merge_upsert(
+                T_EDGES, c.edges_new, keys=_EDGE_KEYS, update_cols=["last_seen_ts"],
+                bucket_col="left_entity_key", merge_on_read=True,
             )
-            edges_current = edges_new
-        if mode == "INCR":
-            # connectivity changes only where a pair's endpoints are NOT
-            # already co-clustered: re-derived edges of re-signed watermark-
-            # boundary entities (and new rule-edges inside an existing
-            # cluster) only refresh last_seen_ts in the MERGE — they must not
-            # drag their whole (possibly huge) clusters into the recluster.
-            # Testing membership rather than the edge store is also
-            # CRASH-SAFE: a prior run that merged edges but failed before
-            # publishing membership leaves those pairs non-co-clustered, so
-            # the re-run still reclusters them (an edge-store anti-join would
-            # see them as "already known" and strand them unclustered).
-            # Bucket-pruned membership lookup + delta-sized joins,
-            # checkpointed before any store pointer moves.
-            new_pairs = _graph_changing_pairs(
-                edges_new,
-                cat.read_slice_for(
-                    T_MEMBERSHIP,
-                    graph.impacted_nodes(edges_new),
-                    "entity_key",
-                    schema_str(_MEMBERSHIP_SCHEMA, spark),
-                ),
-            ).localCheckpoint(eager=True)
-        if dry_run:
-            prior = cat.read(T_EDGES, edges_schema)
-            if mode == "FULL":
-                edges_current = edges_new
-            else:
-                edges_current = prior.unionByName(edges_new).dropDuplicates(edge_keys)
-        elif mode == "INCR":
-            # eager (unlike FULL's deferred overwrite): LP + confidence read
-            # the post-merge store next. Timed as its own stage — at corpus
-            # scale this commit, not the scoring, caps INCR latency when
-            # copy-on-write rewrites every matched bucket (edge_merge_on_read
-            # keeps it O(delta); see sources/catalog.py merge-on-read).
-            with stage("edge_merge") as s:
-                cat.merge_upsert(
-                    T_EDGES, edges_new, keys=edge_keys, update_cols=["last_seen_ts"],
-                    bucket_col="left_entity_key", merge_on_read=cfg.edge_merge_on_read,
-                )
-                edges_current = cat.read(T_EDGES)
-                # LP's subgraph and confidence's edge stats both scan the
-                # post-merge store; each scan re-pays the read AND the MoR
-                # reconciliation anti-join. Under the size gate, a lazy
-                # localCheckpoint materializes it once on first use and every
-                # later consumer reads blocks (freed when unreferenced).
-                n_store = cat.row_count(T_EDGES)
-                if (
-                    cfg.incr_edge_materialize_max_rows > 0
-                    and n_store is not None
-                    and n_store <= cfg.incr_edge_materialize_max_rows
-                ):
-                    edges_current = edges_current.localCheckpoint(eager=False)
-                s.rows(res.edges_created)
+            edges_current = cat.read(T_EDGES)
+            # LP's subgraph and confidence's edge stats both scan the
+            # post-merge store; each scan re-pays the read AND the MoR
+            # reconciliation anti-join. Under the size gate, a lazy
+            # localCheckpoint materializes it once on first use and every
+            # later consumer reads blocks (freed when unreferenced).
+            n_store = cat.row_count(T_EDGES)
+            if (
+                cfg.incr_edge_materialize_max_rows > 0
+                and n_store is not None
+                and n_store <= cfg.incr_edge_materialize_max_rows
+            ):
+                edges_current = edges_current.localCheckpoint(eager=False)
+            c.edges_current = edges_current
+            rows(res.edges_created)
 
-        # -------- subgraph + connected components (stages 30/31)
-        with stage("label_propagation") as s:
+    def _label_propagation(self, c: _RunContext) -> None:
+        """Subgraph + connected components (stages 30/31); raises
+        ConvergenceError (after recording the FAILED run) on non-convergence."""
+        spark, cfg, cat, res = self.spark, self.cfg, self.catalog, c.res
+        with c.stage("label_propagation") as rows:
             membership_current = cat.read(T_MEMBERSHIP, schema_str(_MEMBERSHIP_SCHEMA, spark))
-            if mode == "FULL":
+            if c.mode == "FULL":
                 # full rerun: every node, every edge (sql/common/90_full_rerun.sql).
                 # The node universe is the CHECKPOINTED entity frame (one row
                 # per entity by construction), not DISTINCT over the doubled
@@ -828,13 +845,13 @@ class IDRPipeline:
                 # what the singleton fallback would assign them (its
                 # anti-join just goes empty); final membership is identical
                 # while CC setup drops a full edge-scan exchange.
-                nodes = entities_delta.select("entity_key")
-                sub_edges = edges_current
+                nodes = c.entities_delta.select("entity_key")
+                sub_edges = c.edges_current
             else:
                 # impacted = endpoints of truly-NEW pairs only (re-derived
                 # existing edges don't change components — sql/common/30's
                 # edges_new semantics, restricted to graph-changing rows)
-                impacted = graph.impacted_nodes(new_pairs)
+                impacted = graph.impacted_nodes(c.new_pairs)
                 # steady-state invariant at this call site: committed edges
                 # never cross clusters (see _graph_changing_pairs for the
                 # crash-retry argument; the flush commits membership LAST so
@@ -843,21 +860,17 @@ class IDRPipeline:
                 # saving ~4 edge-store scans per INCR run. The invariant can
                 # break when MATCH SEMANTICS changed since the last committed
                 # run (old edges may cross clusters the new rules would not
-                # form), so the first INCR under a changed match_signature —
-                # or incr_safe_edge_restriction=True — takes the safe 1-hop +
-                # both-endpoint form instead.
-                fast_ok = not cfg.incr_safe_edge_restriction
-                if fast_ok:
-                    prior_sig = self._last_match_signature()
-                    fast_ok = prior_sig == run_sig
-                    if not fast_ok:
-                        res.warnings.append(
-                            "match semantics changed since last committed run "
-                            "(or no signature recorded): using safe subgraph "
-                            "edge restriction for this run"
-                        )
+                # form), so the first INCR under a changed match_signature
+                # takes the safe 1-hop + both-endpoint form instead.
+                fast_ok = self._last_match_signature() == c.run_sig
+                if not fast_ok:
+                    res.warnings.append(
+                        "match semantics changed since last committed run "
+                        "(or no signature recorded): using safe subgraph "
+                        "edge restriction for this run"
+                    )
                 nodes, sub_edges = graph.subgraph(
-                    edges_current, impacted, membership_current,
+                    c.edges_current, impacted, membership_current,
                     members_cover_edges=fast_ok,
                 )
             cc = graph.connected_components(
@@ -865,16 +878,13 @@ class IDRPipeline:
                 sub_edges,
                 algorithm=cfg.cc_algorithm,
                 max_iters=cfg.max_iters,
-                checkpoint_every=cfg.checkpoint_every,
                 edge_count_hint=res.edges_created,
-                star_threshold=cfg.cc_star_threshold_edges,
                 # bounded driver union-find fast path under the cap — gated
                 # on the MEASURED edge count, not the mode: INCR subgraphs
                 # are delta-sized by design; a FULL graph qualifies only when
                 # the corpus itself is tiny (corpus-scale graphs always
                 # exceed the cap and run distributed).
                 local_max_edges=cfg.cc_local_max_edges,
-                frontier=cfg.cc_frontier,
             )
             res.lp_iterations = cc.iterations
             res.lp_converged = cc.converged
@@ -894,54 +904,49 @@ class IDRPipeline:
                 res.warnings.append(
                     f"label propagation did not converge in {cc.iterations} iterations"
                 )
-                res.duration_seconds = round(time.time() - t0, 3)
-                for n_, d_ in self._pending_appends:  # audit rows still land
+                res.duration_seconds = round(time.time() - c.t0, 3)
+                for n_, d_ in c.pending_appends:  # audit rows still land
                     cat.append(n_, d_)
-                self._pending_appends = []
-                self._record_history(res, run_ts, stage_rows)
+                c.pending_appends = []
+                self._record_history(res, c.run_ts, c.stage_rows)
                 raise ConvergenceError(
-                    f"run {run_id}: label propagation did not converge within "
+                    f"run {c.run_id}: label propagation did not converge within "
                     f"{cc.iterations} iterations (algorithm={cfg.cc_algorithm}, "
                     f"max_iters={cfg.max_iters}); no membership was published"
                 )
-            labels, n_labels = _ckpt_count(cc.labels, "labels")
-            s.rows(n_labels)
+            c.labels, c.n_labels = _ckpt_count(cc.labels, "labels")
+            rows(c.n_labels)
 
-        # -------- membership + clusters (stages 40/41/42)
-        with stage("membership_update") as s:
+    def _membership_update(self, c: _RunContext) -> None:
+        """Membership + clusters (stages 40/41/42)."""
+        spark, cat, res = self.spark, self.catalog, c.res
+        full = c.mode == "FULL"
+        with c.stage("membership_update") as rows:
             updates = membership.membership_updates(
-                labels,
-                entities_delta,
-                run_ts,
+                c.labels,
+                c.entities_delta,
+                c.run_ts,
                 prior_members=(
                     None
-                    if mode == "FULL"
+                    if full
                     else cat.read_slice_for(
-                        T_MEMBERSHIP, entities_delta, "entity_key",
+                        T_MEMBERSHIP, c.entities_delta, "entity_key",
                         schema_str(_MEMBERSHIP_SCHEMA, spark),
                     )
                 ),
             )
-            updates = updates.localCheckpoint(eager=True)
-            if not dry_run:
-                if mode == "FULL":
-                    # same deferral as T_EDGES: the checkpointed updates ARE
-                    # the post-overwrite table; keep the sink write out of the
-                    # critical path (cluster sizes/confidence/golden all read
-                    # membership 2-3×)
-                    self._pending_stores.append(
-                        (T_MEMBERSHIP, "overwrite", updates, ["entity_key"], "entity_key",
-                         res.entities_processed)
-                    )
-                else:
-                    # INCR: defer to the concurrent flush too — every
-                    # downstream consumer reads the checkpointed updates frame
-                    # (see below), so nothing waits on the store commit
-                    # (full-row upsert on the key ≡ delete+insert by key)
-                    self._pending_stores.append(
-                        (T_MEMBERSHIP, "delete_insert", updates, ["entity_key"], "entity_key",
-                         n_labels)
-                    )
+            c.updates = updates = updates.localCheckpoint(eager=True)
+            # FULL: same deferral as T_EDGES — the checkpointed updates ARE
+            # the post-overwrite table; keep the sink write out of the
+            # critical path (cluster sizes/confidence/golden all read
+            # membership 2-3×). INCR: defer to the concurrent flush too —
+            # every downstream consumer reads the checkpointed updates frame
+            # (see below), so nothing waits on the store commit (full-row
+            # upsert on the key ≡ delete+insert by key)
+            c.queue(c.pending_stores, (
+                T_MEMBERSHIP, "overwrite" if full else "delete_insert", updates,
+                ["entity_key"], "entity_key", res.entities_processed if full else c.n_labels,
+            ))
             # The checkpointed updates frame IS the impacted-cluster
             # membership in EVERY mode: FULL relabels everyone, and INCR's
             # full-touched-cluster subgraph superset relabels every member of
@@ -952,62 +957,64 @@ class IDRPipeline:
             # O(corpus) membership read on the INCR critical path —
             # edges_current supplies incident edges via joins against the
             # broadcast-sized updates.
-            csizes = membership.cluster_sizes(updates, None, run_ts)
-            estats = confidence.cluster_edge_stats(updates, edges_current, None)
+            c.csizes = membership.cluster_sizes(updates, None, c.run_ts)
+            estats = confidence.cluster_edge_stats(updates, c.edges_current, None)
             # cluster_confidence checkpoints its density frame internally
             # (max_div Observation); return_count rides the SAME job — the
             # second materialize+count this stage used to pay is gone, and
             # every consumer (golden dimension, clusters flush) runs the
             # narrow final projection over that checkpoint
-            conf, res.clusters_impacted = confidence.cluster_confidence(
-                csizes, estats, run_ts, return_count=True
+            c.conf, res.clusters_impacted = confidence.cluster_confidence(
+                c.csizes, estats, c.run_ts, return_count=True
             )
-            if not dry_run:
-                # conf is checkpointed — both modes defer the commit to the
-                # concurrent flush (INCR: delete+insert of impacted clusters)
-                op = "overwrite" if mode == "FULL" else "delete_insert"
-                self._pending_stores.append(
-                    (T_CLUSTERS, op, conf, ["resolved_id"], "resolved_id", res.clusters_impacted)
-                )
-            s.rows(res.clusters_impacted)
+            # conf is checkpointed — both modes defer the commit to the
+            # concurrent flush (INCR: delete+insert of impacted clusters)
+            c.queue(c.pending_stores, (
+                T_CLUSTERS, "overwrite" if full else "delete_insert", c.conf,
+                ["resolved_id"], "resolved_id", res.clusters_impacted,
+            ))
+            rows(res.clusters_impacted)
 
-        # -------- golden profile (stage 50)
-        with stage("golden_profile") as s:
-            if cfg.attributes:
-                attrs_delta = golden.build_entities_all(spark, cfg, loaded)
-                # survivorship ranks ALL members of impacted clusters — old
-                # members' attributes come from the store (delta-maintained)
-                entities_all = self._maintain_store(
-                    T_ENTITY_ATTRS,
-                    attrs_delta,
-                    keys=["entity_key", "table_id"],
-                    bucket_col="entity_key",
-                    mode=mode,
-                    dry_run=dry_run,
-                    delta_is_full=delta_is_full,
-                    approx_rows=res.entities_processed * max(1, len(cfg.attributes)),
-                    full_df_fn=lambda: golden.build_entities_all(
-                        spark, cfg, extract.load_sources(spark, cfg)
-                    ),
-                )
-                gold = golden.golden_updates(
-                    spark, cfg, entities_all, updates, None, run_ts,
-                    # the checkpointed confidence frame is exactly one row per
-                    # (impacted) cluster in every mode — free dimension
-                    cluster_ids=conf,
-                )
-                gold, n_gold = _ckpt_count(gold, "golden")
-                if not dry_run:
-                    op = "overwrite" if mode == "FULL" else "delete_insert"
-                    self._pending_stores.append(
-                        (T_GOLDEN, op, gold, ["resolved_id"], "resolved_id", n_gold)
-                    )
-                s.rows(n_gold)
+    def _golden_profile(self, c: _RunContext) -> None:
+        """Golden profile (stage 50)."""
+        spark, cfg = self.spark, self.cfg
+        with c.stage("golden_profile") as rows:
+            if not cfg.attributes:
+                return
+            attrs_delta = golden.build_entities_all(spark, cfg, c.loaded)
+            # survivorship ranks ALL members of impacted clusters — old
+            # members' attributes come from the store (delta-maintained)
+            entities_all = self._maintain_store(
+                c,
+                T_ENTITY_ATTRS,
+                attrs_delta,
+                keys=["entity_key", "table_id"],
+                bucket_col="entity_key",
+                approx_rows=c.res.entities_processed * max(1, len(cfg.attributes)),
+                full_df_fn=lambda: golden.build_entities_all(
+                    spark, cfg, extract.load_sources(spark, cfg)
+                ),
+            )
+            gold = golden.golden_updates(
+                spark, cfg, entities_all, c.updates, None, c.run_ts,
+                # the checkpointed confidence frame is exactly one row per
+                # (impacted) cluster in every mode — free dimension
+                cluster_ids=c.conf,
+            )
+            gold, n_gold = _ckpt_count(gold, "golden")
+            c.queue(c.pending_stores, (
+                T_GOLDEN, "overwrite" if c.mode == "FULL" else "delete_insert", gold,
+                ["resolved_id"], "resolved_id", n_gold,
+            ))
+            rows(n_gold)
 
-        # -------- audit + lineage + run_state (stages 60/70)
-        with stage("output_write") as s:
+    def _output_write(self, c: _RunContext) -> None:
+        """Audit + lineage + the deferred store flush + run_state (stages
+        60/70)."""
+        cat, res, run_id, run_ts = self.catalog, c.res, c.run_id, c.run_ts
+        with c.stage("output_write") as rows:
             audit = (
-                edges_new.groupBy("rule_id")
+                c.edges_new.groupBy("rule_id")
                 .agg(F.count(F.lit(1)).alias("edges_created"))
                 .select(
                     F.lit(run_id).alias("run_id"),
@@ -1026,7 +1033,7 @@ class IDRPipeline:
             # whole store again every micro-batch would be an O(corpus) scan
             # on the INCR critical path for a per-run observability row.
             quality = (
-                identifiers_delta.groupBy("identifier_type")
+                c.identifiers_delta.groupBy("identifier_type")
                 .agg(
                     F.count(F.lit(1)).alias("n_values"),
                     F.approx_count_distinct("identifier_value_norm").alias("approx_distinct"),
@@ -1052,15 +1059,15 @@ class IDRPipeline:
             # observability. Singleton blocks are excluded upstream (see the
             # sizes filter in edge_building): at corpus scale they are ~90% of
             # distinct values and carry zero matching signal.
-            lineage = sizes.select(
+            lineage = c.sizes.select(
                 F.lit(run_id).alias("run_id"),
                 F.sha2(F.concat_ws("§", "identifier_type", "identifier_value_norm"), 256).alias("block_id"),
                 "identifier_type",
                 F.col("group_size"),
                 (F.col("group_size") - F.lit(1)).alias("pair_count"),
             )
-            if scored_hist is not None:
-                hist = scored_hist.select(
+            if c.scored_hist is not None:
+                hist = c.scored_hist.select(
                     F.sha2(F.concat_ws("§", "identifier_type", "identifier_value_norm"), 256).alias("block_id"),
                     F.col("pair_count").alias("scored_pair_count"),
                     "score_histogram",
@@ -1072,89 +1079,28 @@ class IDRPipeline:
                 )
             lineage = lineage.withColumn("cluster_delta", F.lit(res.clusters_impacted))
 
-            # flush deferred store commits BEFORE the watermark advances: an
-            # interrupted flush re-derives and re-merges the same delta next
-            # run (idempotent delete+insert), never losing entities.
-            # Each pending store targets its own table dir/pointer. FULL-mode
-            # overwrite frames are already checkpointed; INCR delete_insert
-            # deltas may still hold lazy plans (recomputed here, off the hot
-            # stages) — submit the write jobs from a small thread pool so
-            # Spark schedules them concurrently (the writes are IO-heavy with
-            # idle cores between stages; overlapping them cuts the flush wall
-            # time at every parallelism level). The three observability
-            # appends (audit / quality / lineage) read only checkpointed
-            # frames and target their own append tables, so they join the
-            # same pool instead of running serially ahead of it. setJobGroup
-            # is thread-local, so each worker re-tags its own thread for UI
-            # attribution.
-            # COMMIT-ORDER BARRIER (publish-phase only): T_MEMBERSHIP's
-            # POINTER publishes LAST, strictly after every other store/append
-            # publish succeeded. The INCR retry's recluster scope is gated on
-            # membership co-clustering (_graph_changing_pairs): if a crash
-            # left membership PUBLISHED but clusters/golden UNpublished, the
-            # retry would see the pairs already co-clustered, find an empty
-            # impacted set, and never recompute the downstream tables —
-            # permanently stale. With the membership pointer last, any crash
-            # window that leaves a downstream table unpublished also leaves
-            # membership unpublished, so the retry re-qualifies the pairs and
-            # re-derives everything (idempotent delete+insert). Unlike the
-            # round-5 barrier (which serialized membership's whole commit
-            # after the pool), only the atomic pointer swap is ordered: the
-            # membership WRITE work overlaps the rest of the pool
-            # (defer_publish — sources/catalog.py), restoring flush overlap
-            # while keeping the exact same crash-window guarantee.
-            deferred_publish: list = []
+            # run_state / engine_config_state are one-row-per-source state
+            # tables whose content the driver already holds (the watermark
+            # maxes rode the entity checkpoint's Observation): driver-side
+            # MERGE after the flush, zero Spark jobs. engine_config_state
+            # records the match semantics this committed state was built
+            # under — the next INCR compares and falls back to the safe
+            # subgraph restriction if they differ
+            wm_rows = [
+                (tid, wm, run_id, run_ts) for tid, wm in c.wm_by_table.items() if wm is not None
+            ]
+            if wm_rows:
+                c.queue(c.pending_state, (T_RUN_STATE, wm_rows, ["table_id"], _RUN_STATE_SCHEMA))
+            c.queue(c.pending_state, (
+                T_CONFIG_STATE, [("match_signature", c.run_sig, run_id)], ["k"],
+                "k string, v string, last_run_id string",
+            ))
 
-            def _flush(entry):
-                spark.sparkContext.setJobGroup(
-                    "output_write", f"idr store flush {entry[1]}", False
-                )
-                if entry[0] == "append":
-                    _, st_name, st_df = entry
-                    cat.append(st_name, st_df)
-                else:
-                    _, st_name, st_op, st_df, st_keys, st_bucket, st_rows = entry
-                    defer = st_name == T_MEMBERSHIP
-                    if st_op == "overwrite":
-                        pub = cat.overwrite(
-                            st_name, st_df, bucket_col=st_bucket, defer_publish=defer,
-                            approx_rows=st_rows,
-                        )
-                    else:
-                        pub = cat.delete_insert(
-                            st_name, st_df, keys=st_keys, bucket_col=st_bucket,
-                            merge_on_read=cfg.store_merge_on_read, defer_publish=defer,
-                            approx_rows=st_rows,
-                        )
-                    if pub is not None:
-                        deferred_publish.append(pub)
-
-            flush_tasks = (
-                [
-                    ("append", T_AUDIT, audit),
-                    ("append", T_IDENTIFIER_QUALITY, quality),
-                    ("append", T_LINEAGE, lineage),
-                ]
-                + [("append", n_, d_) for n_, d_ in self._pending_appends]
-                + [("store", *entry) for entry in self._pending_stores]
-            )
-            n_flush = max(1, int(cfg.flush_max_workers))
-            if len(flush_tasks) > 1 and n_flush > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=min(n_flush, len(flush_tasks))) as ex:
-                    list(ex.map(_flush, flush_tasks))
-            else:
-                for entry in flush_tasks:
-                    _flush(entry)
-            # every other table's pointer is live; now (and only now) swap
-            # the membership pointer — a failure anywhere above skips this,
-            # which is exactly the crash window the retry logic handles
-            for pub in deferred_publish:
-                pub()
-            self._pending_stores = []
-            self._pending_appends = []
-            if self._ids_count_from_pointer and not dry_run:
+            # the exact store total exists only once the identifier store
+            # commits (a dry run queues no commit)
+            ids_committed = any(e[0] == T_IDENTIFIERS for e in c.pending_stores)
+            self._flush(c, [(T_AUDIT, audit), (T_IDENTIFIER_QUALITY, quality), (T_LINEAGE, lineage)])
+            if c.ids_count_from_pointer and ids_committed:
                 # INCR metric backfill: exact post-merge store total from the
                 # just-committed pointer (per-bucket footer counts) — replaces
                 # the O(table) count scan that used to run mid-extract
@@ -1165,7 +1111,7 @@ class IDRPipeline:
             # run actually rewrote (≙ Iceberg snapshot summary changed-
             # partition counts) — INCR health is "fraction ≪ 1".
             res.store_commits = dict(cat.last_commit_stats)
-            if res.store_commits and not dry_run:
+            if res.store_commits:
                 # driver-held scalars → driver-side parquet append (zero jobs)
                 cat.append_rows(
                     "store_commit_metrics",
@@ -1177,71 +1123,129 @@ class IDRPipeline:
                     "run_id string, table_name string, n_buckets int, touched_buckets int, "
                     "rewritten_fraction double, run_ts timestamp",
                 )
+            for name, state_rows, keys, schema in c.pending_state:
+                cat.merge_upsert_rows(name, state_rows, keys=keys, schema=schema)
+            c.pending_state = []
+            rows(0)
 
-            if not dry_run:
-                # run_state / engine_config_state are one-row-per-source
-                # state tables whose content the driver already holds (the
-                # watermark maxes rode the entity checkpoint's Observation):
-                # driver-side MERGE, zero Spark jobs — was 2 serial Spark
-                # merge jobs closing every run
-                wm_rows = [
-                    (tid, wm, run_id, run_ts)
-                    for tid, wm in wm_by_table.items()
-                    if wm is not None
-                ]
-                if wm_rows:
-                    cat.merge_upsert_rows(
-                        T_RUN_STATE, wm_rows, keys=["table_id"],
-                        schema=_RUN_STATE_SCHEMA,
+    def _flush(self, c: _RunContext, appends: list[tuple]) -> None:
+        """Flush deferred store commits BEFORE the watermark advances: an
+        interrupted flush re-derives and re-merges the same delta next run
+        (idempotent delete+insert), never losing entities.
+
+        Each pending store targets its own table dir/pointer. FULL-mode
+        overwrite frames are already checkpointed; INCR delete_insert deltas
+        may still hold lazy plans (recomputed here, off the hot stages) —
+        submit the write jobs from a small thread pool so Spark schedules
+        them concurrently (the writes are IO-heavy with idle cores between
+        stages; overlapping them cuts the flush wall time at every
+        parallelism level). The observability appends (``appends`` plus the
+        queued ones) read only checkpointed frames and target their own
+        append tables, so they join the same pool instead of running serially
+        ahead of it. setJobGroup is thread-local, so each worker re-tags its
+        own thread for UI attribution.
+
+        COMMIT-ORDER BARRIER (publish-phase only): T_MEMBERSHIP's POINTER
+        publishes LAST, strictly after every other store/append publish
+        succeeded. The INCR retry's recluster scope is gated on membership
+        co-clustering (_graph_changing_pairs): if a crash left membership
+        PUBLISHED but clusters/golden UNpublished, the retry would see the
+        pairs already co-clustered, find an empty impacted set, and never
+        recompute the downstream tables — permanently stale. With the
+        membership pointer last, any crash window that leaves a downstream
+        table unpublished also leaves membership unpublished, so the retry
+        re-qualifies the pairs and re-derives everything (idempotent
+        delete+insert). Only the atomic pointer swap is ordered: the
+        membership WRITE work overlaps the rest of the pool (defer_publish —
+        sources/catalog.py)."""
+        spark, cat = self.spark, self.catalog
+        deferred_publish: list = []
+
+        def _flush_one(entry):
+            spark.sparkContext.setJobGroup(
+                "output_write", f"idr store flush {entry[1]}", False
+            )
+            if entry[0] == "append":
+                _, st_name, st_df = entry
+                cat.append(st_name, st_df)
+            else:
+                _, st_name, st_op, st_df, st_keys, st_bucket, st_rows = entry
+                defer = st_name == T_MEMBERSHIP
+                if st_op == "overwrite":
+                    pub = cat.overwrite(
+                        st_name, st_df, bucket_col=st_bucket, defer_publish=defer,
+                        approx_rows=st_rows,
                     )
-                # record the match semantics this committed state was built
-                # under — the next INCR compares and falls back to the safe
-                # subgraph restriction if they differ
-                cat.merge_upsert_rows(
-                    T_CONFIG_STATE,
-                    [("match_signature", run_sig, run_id)],
-                    keys=["k"],
-                    schema="k string, v string, last_run_id string",
-                )
-            s.rows(0)
+                else:
+                    pub = cat.delete_insert(
+                        st_name, st_df, keys=st_keys, bucket_col=st_bucket,
+                        merge_on_read=True, defer_publish=defer,
+                        approx_rows=st_rows,
+                    )
+                if pub is not None:
+                    deferred_publish.append(pub)
 
-        # -------- dry-run diff (idr_run.py:705-746)
-        if dry_run:
-            with stage("dry_run_diff") as s:
-                prior_membership = cat.read(T_MEMBERSHIP, schema_str(_MEMBERSHIP_SCHEMA, spark))
-                prior_clusters = cat.read(T_CLUSTERS, schema_str(_CLUSTERS_SCHEMA, spark))
-                diff = membership.dry_run_diff(
-                    updates, prior_membership, prior_clusters, csizes, entities_delta, run_id
-                ).localCheckpoint(eager=True)
-                cat.append(T_DRY_RESULTS, diff)
-                counts = {r["change_type"]: r["n"] for r in diff.groupBy("change_type").agg(F.count(F.lit(1)).alias("n")).collect()}
-                largest = csizes.agg(F.max("cluster_size").alias("m")).first()["m"] or 0
-                summary = spark.createDataFrame(
-                    [(
-                        run_id,
-                        sum(counts.values()),
-                        counts.get("NEW", 0),
-                        counts.get("MOVED", 0),
-                        counts.get("UNCHANGED", 0),
-                        int(largest),
-                        res.edges_created,
-                        res.groups_skipped,
-                        res.values_excluded,
-                        float(round(time.time() - t0, 3)),
-                    )],
-                    "run_id string, total_entities bigint, new_entities bigint, moved_entities bigint, "
-                    "unchanged_entities bigint, largest_proposed_cluster bigint, edges_would_create bigint, "
-                    "groups_would_skip bigint, values_would_exclude bigint, execution_time_seconds double",
-                )
-                cat.append(T_DRY_SUMMARY, summary)
-                s.rows(sum(counts.values()))
-
-        # -------- finalize: run_history / stage_metrics / metrics_export
-        res.duration_seconds = round(time.time() - t0, 3)
-        res.status = (
-            "DRY_RUN_COMPLETE" if dry_run else ("SUCCESS_WITH_WARNINGS" if res.warnings else "SUCCESS")
+        flush_tasks = (
+            [("append", n_, d_) for n_, d_ in appends + c.pending_appends]
+            + [("store", *entry) for entry in c.pending_stores]
         )
-        self._record_history(res, run_ts, stage_rows)
+        n_flush = max(1, int(self.cfg.flush_max_workers))
+        if len(flush_tasks) > 1 and n_flush > 1:
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=min(n_flush, len(flush_tasks))) as ex:
+                list(ex.map(_flush_one, flush_tasks))
+        else:
+            for entry in flush_tasks:
+                _flush_one(entry)
+        # every other table's pointer is live; now (and only now) swap
+        # the membership pointer — a failure anywhere above skips this,
+        # which is exactly the crash window the retry logic handles
+        for pub in deferred_publish:
+            pub()
+        c.pending_stores = []
+        c.pending_appends = []
+
+    def _dry_run_diff(self, c: _RunContext) -> None:
+        """NEW/MOVED/UNCHANGED diff of a dry run (idr_run.py:705-746)."""
+        spark, cat, res = self.spark, self.catalog, c.res
+        with c.stage("dry_run_diff") as rows:
+            prior_membership = cat.read(T_MEMBERSHIP, schema_str(_MEMBERSHIP_SCHEMA, spark))
+            prior_clusters = cat.read(T_CLUSTERS, schema_str(_CLUSTERS_SCHEMA, spark))
+            diff = membership.dry_run_diff(
+                c.updates, prior_membership, prior_clusters, c.csizes, c.entities_delta, c.run_id
+            ).localCheckpoint(eager=True)
+            cat.append(T_DRY_RESULTS, diff)
+            counts = {r["change_type"]: r["n"] for r in diff.groupBy("change_type").agg(F.count(F.lit(1)).alias("n")).collect()}
+            largest = c.csizes.agg(F.max("cluster_size").alias("m")).first()["m"] or 0
+            summary = spark.createDataFrame(
+                [(
+                    c.run_id,
+                    sum(counts.values()),
+                    counts.get("NEW", 0),
+                    counts.get("MOVED", 0),
+                    counts.get("UNCHANGED", 0),
+                    int(largest),
+                    res.edges_created,
+                    res.groups_skipped,
+                    res.values_excluded,
+                    float(round(time.time() - c.t0, 3)),
+                )],
+                "run_id string, total_entities bigint, new_entities bigint, moved_entities bigint, "
+                "unchanged_entities bigint, largest_proposed_cluster bigint, edges_would_create bigint, "
+                "groups_would_skip bigint, values_would_exclude bigint, execution_time_seconds double",
+            )
+            cat.append(T_DRY_SUMMARY, summary)
+            rows(sum(counts.values()))
+
+    def _finalize(self, c: _RunContext) -> RunResult:
+        """run_history / stage_metrics / metrics_export."""
+        res, run_id = c.res, c.run_id
+        res.duration_seconds = round(time.time() - c.t0, 3)
+        res.status = (
+            "DRY_RUN_COMPLETE" if c.dry_run else ("SUCCESS_WITH_WARNINGS" if res.warnings else "SUCCESS")
+        )
+        self._record_history(res, c.run_ts, c.stage_rows)
         exported_at = datetime.now(timezone.utc).replace(tzinfo=None)
         metrics = [
             (run_id, "idr_run_duration_seconds", float(res.duration_seconds), "gauge", exported_at),
@@ -1251,7 +1255,7 @@ class IDRPipeline:
             (run_id, "idr_lp_iterations", float(res.lp_iterations), "gauge", exported_at),
             (run_id, "idr_groups_skipped", float(res.groups_skipped), "counter", exported_at),
         ]
-        cat.append_rows(
+        self.catalog.append_rows(
             T_METRICS,
             metrics,
             "run_id string, metric_name string, metric_value double, metric_type string, "

@@ -15,8 +15,10 @@ import threading
 from pyspark.sql import SparkSession
 
 # applications whose python-worker pool was already warmed (getOrCreate can
-# hand the same SparkContext to many build_session callers — warm once)
+# hand the same SparkContext to many build_session callers — warm once);
+# the lock makes the check-then-add atomic across concurrent callers
 _WARMED_APPS: set[str] = set()
+_WARMED_LOCK = threading.Lock()
 
 
 def _passthrough_batches(it):
@@ -86,26 +88,12 @@ def build_session(
         # 2.9 -> 0.9 s and edge_building 4.6 -> 3.3 s at 64k, paired A/B).
         # Scale-invariant: at corpus scale per-partition bytes dwarf this
         # floor, so large-shuffle plans are untouched.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
-        )
-        # reading a bucketed store passes one path per bucket; above this
-        # path count Spark runs a DISTRIBUTED file-listing job — one task per
-        # path, ~0 compute, ~0.5 s of pure task scheduling per 256-bucket
-        # read (measured; several reads per INCR run). Driver-side listing of
-        # direct-filesystem paths is microseconds, so lift the threshold;
-        # object-store deployments with wider tables can lower it back via
-        # env (distributed listing pays off when a LIST call is a slow RPC).
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "4096"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         # broadcast threshold: metadata tables (rules/exclusions/trust) are tiny and
         # must broadcast; 64MB keeps dimension joins shuffle-free.
@@ -115,42 +103,43 @@ def build_session(
         .config("spark.io.compression.codec", "zstd")
         .config("spark.io.compression.zstd.level", "1")
     )
-    # local masters: fork python workers from a daemon that already imported
-    # numpy/pandas/pyarrow (COW-shared) — the first pandas-UDF action otherwise
-    # pays ~4.3 CPU-seconds of imports in EACH of the n_cores workers it
-    # spawns (measured: first-action wall 4.3 -> 2.5 s at local[32]). Scoped
-    # to local* masters because the daemon module must be importable at
-    # executor-python startup (PYTHONPATH above guarantees that here; on a
-    # cluster, ship the package and opt in via spark.python.daemon.module).
-    if master.startswith("local") and os.environ.get("SPARK_GRAFT_DAEMON_PRELOAD", "1") != "0":
-        builder = builder.config(
-            "spark.python.daemon.module", "sql_identity_resolution_spark.daemon_preload"
+    if master.startswith("local"):
+        builder = (
+            builder
+            # fork python workers from a daemon that already imported
+            # numpy/pandas/pyarrow (COW-shared) — the first pandas-UDF action
+            # otherwise pays ~4.3 CPU-seconds of imports in EACH of the
+            # n_cores workers it spawns (measured: first-action wall 4.3 ->
+            # 2.5 s at local[32]). Scoped to local* masters because the daemon
+            # module must be importable at executor-python startup (PYTHONPATH
+            # above guarantees that here; on a cluster, ship the package and
+            # opt in via spark.python.daemon.module).
+            .config("spark.python.daemon.module", "sql_identity_resolution_spark.daemon_preload")
+            # skip Hadoop's ChecksumFileSystem for file:// — it writes (and
+            # verifies) a .crc sidecar per file, which doubles filesystem ops
+            # on bucketed stores (one parquet file per bucket; measured 15-25%
+            # off a 256-bucket commit). Matches object-store deployments,
+            # where the warehouse scheme has no client-side checksum layer.
+            .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+            # reading a bucketed store passes one path per bucket; above this
+            # path count Spark runs a DISTRIBUTED file-listing job — one task
+            # per path, ~0 compute, ~0.5 s of pure task scheduling per
+            # 256-bucket read (measured; several reads per INCR run).
+            # Driver-side listing of local paths is microseconds, so lift the
+            # threshold. Cluster masters keep Spark's default: on object
+            # stores a LIST call is a slow RPC and distributed listing pays.
+            .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
         )
-    # local masters: skip Hadoop's ChecksumFileSystem for file:// — it writes
-    # (and verifies) a .crc sidecar per file, which doubles filesystem ops on
-    # bucketed stores (one parquet file per bucket; measured 15-25% off a
-    # 256-bucket commit). Matches object-store deployments, where the
-    # warehouse scheme has no client-side checksum layer either.
-    if master.startswith("local") and os.environ.get("SPARK_GRAFT_RAW_LOCAL_FS", "1") != "0":
-        builder = builder.config(
-            "spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem"
-        )
-    # ad-hoc conf injection for experiments/deployments without code changes:
-    # SPARK_GRAFT_EXTRA_CONF="spark.foo=1;spark.bar=2"
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
-    if env_conf:
-        for kv in env_conf.split(";"):
-            if "=" in kv:
-                k, v = kv.split("=", 1)
-                builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if master.startswith("local") and os.environ.get("SPARK_GRAFT_WORKER_WARMUP", "1") != "0":
+    if master.startswith("local"):
         app_id = spark.sparkContext.applicationId
-        if app_id not in _WARMED_APPS:
+        with _WARMED_LOCK:
+            first = app_id not in _WARMED_APPS
             _WARMED_APPS.add(app_id)
+        if first:
             n = spark.sparkContext.defaultParallelism or (os.cpu_count() or 8)
             threading.Thread(
                 target=_warm_python_workers, args=(spark, n), daemon=True

@@ -55,16 +55,13 @@ def conversation_signatures(
     count), so the plan still has exactly ONE shuffle of turn text; wide
     multi-file inputs (the corpus-scale case) are left untouched."""
     spark = turns.sparkSession
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_SIG_REPART", "1") != "0":
-        try:
-            nparts = turns.rdd.getNumPartitions()  # driver-side planning, no job
-        except Exception:
-            nparts = None
-        cores = spark.sparkContext.defaultParallelism
-        if nparts is not None and nparts < max(2, cores // 2):
-            turns = turns.repartition("conv_id")
+    try:
+        nparts = turns.rdd.getNumPartitions()  # driver-side planning, no job
+    except Exception:
+        nparts = None
+    cores = spark.sparkContext.defaultParallelism
+    if nparts is not None and nparts < max(2, cores // 2):
+        turns = turns.repartition("conv_id")
     norm = F.trim(F.regexp_replace(F.lower(F.coalesce(F.col("t.text"), F.lit(""))), r"[^a-z0-9]+", " "))
     ordered = (
         turns.alias("t")

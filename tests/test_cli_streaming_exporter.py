@@ -52,6 +52,17 @@ def test_cli_end_to_end(spark, crm, capsys):
     assert out["entities_processed"] == 3 and out["edges_created"] == 1
 
 
+def test_load_config_rejects_unknown_keys(tmp_path):
+    from sql_identity_resolution_spark.plans.cli import load_config
+
+    cfg_path = tmp_path / "cfg.json"
+    cfg_path.write_text(json.dumps({"warehouse": str(tmp_path / "wh"), "checkpoint_every": 1}))
+    with pytest.raises(ValueError, match=r"unknown config keys \['checkpoint_every'\]"):
+        load_config(str(cfg_path))
+    cfg_path.write_text(json.dumps({"warehouse": str(tmp_path / "wh"), "max_iters": 7}))
+    assert load_config(str(cfg_path)).max_iters == 7
+
+
 def test_exporter_and_views(spark, crm):
     from sql_identity_resolution_spark import EngineConfig, IDRPipeline, IdentifierMapping, Rule, SourceTable
     from sql_identity_resolution_spark.plans.exporter import export_prometheus, monitoring_views
@@ -88,6 +99,41 @@ def test_dashboard_generation(spark, crm, tmp_path):
     page = open(out).read()
     for section in ["Cluster size distribution", "Recent runs", "Stage timings", "Identifier quality"]:
         assert section in page
+
+
+def test_metadata_csv_loader_missing_inputs_fail_loudly(tmp_path):
+    from sql_identity_resolution_spark.plans.metadata_csv import (
+        REQUIRED_CSVS,
+        MetadataBundleError,
+        load_metadata_csv,
+    )
+
+    wh = str(tmp_path / "wh")
+    with pytest.raises(MetadataBundleError, match="directory not found"):
+        load_metadata_csv(str(tmp_path / "no_such_bundle"), warehouse=wh)
+    bundle = tmp_path / "bundle"
+    bundle.mkdir()
+    headers = {
+        "source_table": "table_id,entity_key_expr,watermark_column\ncrm,id,updated_at\n",
+        "rule": "rule_id,identifier_type\nR_EMAIL,EMAIL\n",
+        "identifier_mapping": "table_id,identifier_type,identifier_value_expr\ncrm,EMAIL,email\n",
+    }
+    for missing in REQUIRED_CSVS:
+        for name in REQUIRED_CSVS:
+            path = bundle / f"{name}.csv"
+            if name == missing:
+                path.unlink(missing_ok=True)
+            else:
+                path.write_text(headers[name])
+        with pytest.raises(MetadataBundleError, match=f"required {missing}.csv"):
+            load_metadata_csv(str(bundle), warehouse=wh)
+    # every required CSV present: the optional ones (source, survivorship,
+    # attributes, exclusions) may be absent
+    for name in REQUIRED_CSVS:
+        (bundle / f"{name}.csv").write_text(headers[name])
+    cfg = load_metadata_csv(str(bundle), warehouse=wh, paths={"crm": "/data/crm"})
+    assert [r.rule_id for r in cfg.rules] == ["R_EMAIL"]
+    assert cfg.trust == [] and cfg.attributes == [] and cfg.exclusions == []
 
 
 def test_metadata_csv_loader_reference_bundle(spark, tmp_path):

@@ -51,3 +51,11 @@ def test_f1_spark_generator_with_chains(spark, tmp_path):
     res, membership = _run_pipeline(spark, tmp_path, turns_path)
     scores = pairwise_f1(membership, truth, key="conv_id")
     assert scores.f1 >= 0.99, scores
+
+
+def test_generate_transcripts_single_truth_cluster_terminates():
+    """A corpus drawn as ONE truth cluster has no cross-cluster pair: the
+    negative-pair sampler must stop instead of looping forever."""
+    gen = generate_transcripts(n_conversations=50, seed=103)
+    assert gen.truth["truth_cluster_id"].nunique() == 1
+    assert gen.labeled_pairs["is_match"].all() and len(gen.labeled_pairs) > 0

@@ -434,53 +434,49 @@ def test_incr_retry_reclusters_edges_merged_by_failed_run(spark, tmp_path):
     assert m["crm:A"] == m["crm:B"] == m["crm:C"] == "crm:A", f"stranded: {m}"
 
 
-# serial flush (flush_max_workers=1) publishes identical outputs to the
-# default concurrent pool — the heap-pressure fallback must not change results
+def _full_rerun(spark, tmp_path, sub, batch):
+    """A fresh warehouse holding one FULL run over ``batch``."""
+    (tmp_path / sub).mkdir()
+    pipe = IDRPipeline(spark, make_cfg(tmp_path / sub, rows(batch)))
+    pipe.run("FULL")
+    return pipe
+
+
 def test_edge_merge_on_read_parity(spark, tmp_path):
-    """INCR with edge_merge_on_read (update parts + read-time reconcile) must
-    publish byte-identical state to copy-on-write: same memberships, same edge
-    rows INCLUDING the matched-row semantics (first_seen_ts kept from the
-    target, last_seen_ts refreshed from the source re-observation)."""
+    """Chained INCR runs over the merge-on-read edge store (update parts +
+    read-time reconcile) publish the same memberships and edge keys as a
+    FULL rerun, with the matched-row semantics of the MERGE: first_seen_ts
+    kept from the target, last_seen_ts refreshed by the re-observation."""
     t1, t2, t3 = datetime(2026, 1, 1), datetime(2026, 2, 1), datetime(2026, 3, 1)
     base = [("A", "a@x.com", "111", t1), ("B", "a@x.com", "222", t1)]
     batch2 = base + [("C", "a@x.com", "222", t2)]           # re-observes A–B pairs
     batch3 = batch2 + [("D", "d@x.com", "999", t3), ("A", "a@x.com", "111", t3)]
 
-    def run_variant(sub, mor):
-        (tmp_path / sub).mkdir()
-        src = tmp_path / sub / "crm.parquet"
-        write_parquet(pd.DataFrame(rows(base)), str(src))
-        cfg = EngineConfig(
-            warehouse=str(tmp_path / sub / "wh"),
-            sources=[SourceTable("crm", "entity_id", "updated_at", path=str(src))],
-            rules=[
-                Rule("R_EMAIL_EXACT", "EMAIL", "Email exact", priority=1, canonicalize="LOWERCASE"),
-                Rule("R_PHONE_EXACT", "PHONE", "Phone exact", priority=2),
-            ],
-            mappings=[
-                IdentifierMapping("crm", "EMAIL", "email"),
-                IdentifierMapping("crm", "PHONE", "phone"),
-            ],
-            edge_merge_on_read=mor,
-        )
-        pipe = IDRPipeline(spark, cfg)
-        pipe.run("FULL")
-        for batch in (batch2, batch3):
-            write_parquet(pd.DataFrame(rows(batch)), str(src))
-            pipe.run("INCR")
-        raw = [tuple(r) for r in pipe.catalog.read("identity_edges_current").collect()]
-        # first/last_seen are wall-clock run timestamps — normalize to the
-        # rank of the run that stamped them so the two variants compare
-        ts_rank = {t: i for i, t in enumerate(sorted({v for r in raw for v in r[-2:]}))}
-        edges = sorted(r[:-2] + (ts_rank[r[-2]], ts_rank[r[-1]]) for r in raw)
-        return memberships(pipe), edges
+    (tmp_path / "chained").mkdir()
+    pipe = IDRPipeline(spark, make_cfg(tmp_path / "chained", rows(base)))
+    pipe.run("FULL")
+    for batch in (batch2, batch3):
+        write_parquet(pd.DataFrame(rows(batch)), str(tmp_path / "chained" / "crm.parquet"))
+        pipe.run("INCR")
+    full = _full_rerun(spark, tmp_path, "full", batch3)
 
-    m_mor, e_mor = run_variant("mor", True)
-    m_cow, e_cow = run_variant("cow", False)
-    assert m_mor == m_cow
-    assert e_mor == e_cow  # full rows: keys + first_seen/last_seen semantics
+    def edges(p):
+        return {tuple(r[:5]): (r["first_seen_ts"], r["last_seen_ts"])
+                for r in p.catalog.read("identity_edges_current").collect()}
+
+    chained = edges(pipe)
+    assert memberships(pipe) == memberships(full)
+    assert set(chained) == set(edges(full))
+    # first/last_seen are wall-clock run timestamps — compare their ranks
+    ts_rank = {t: i for i, t in enumerate(sorted({v for fl in chained.values() for v in fl}))}
+    assert all(ts_rank[f] <= ts_rank[last] for f, last in chained.values())
+    first, last = chained[("R_EMAIL_EXACT", "crm:A", "crm:B", "EMAIL", "a@x.com")]
+    assert ts_rank[first] == 0  # kept from the FULL run that created it
+    assert ts_rank[last] == len(ts_rank) - 1  # refreshed by the last INCR
 
 
+# serial flush (flush_max_workers=1) publishes identical outputs to the
+# default concurrent pool — the heap-pressure fallback must not change results
 def test_serial_flush_same_outputs(spark, tmp_path):
     data = rows([
         ("A001", "a@x.com", "111"),
@@ -522,9 +518,9 @@ def _published_state(pipe):
 
 
 def test_membership_store_merge_on_read_parity(spark, tmp_path):
-    """INCR membership/clusters/golden via merge-on-read delete+insert must
-    publish the identical state to copy-on-write — and the chained batch's
-    membership commit must stop rewriting every bucket (the round-4
+    """Chained INCR membership/clusters/golden via merge-on-read
+    delete+insert publish the same state as a FULL rerun — and the chained
+    batch's membership commit rewrites no bucket (the round-4
     rewritten_fraction-1.0 finding)."""
     t1, t2, t3 = datetime(2026, 1, 1), datetime(2026, 2, 1), datetime(2026, 3, 1)
     base = [("A", "a@x.com", "111", t1), ("B", "b@x.com", "222", t1)]
@@ -532,21 +528,15 @@ def test_membership_store_merge_on_read_parity(spark, tmp_path):
     batch2 = base + [("C", "a@x.com", "333", t2)]
     batch3 = batch2 + [("D", "b@x.com", "444", t3)]
 
-    def run_variant(sub, mor):
-        (tmp_path / sub).mkdir()
-        cfg = make_cfg(tmp_path / sub, rows(base), store_merge_on_read=mor)
-        pipe = IDRPipeline(spark, cfg)
-        pipe.run("FULL")
-        last = None
-        for batch in (batch2, batch3):
-            write_parquet(pd.DataFrame(rows(batch)), str(tmp_path / sub / "crm.parquet"))
-            last = pipe.run("INCR")
-        return pipe, last
-
-    pipe_m, res_m = run_variant("mor", True)
-    pipe_c, _ = run_variant("cow", False)
-    assert _published_state(pipe_m) == _published_state(pipe_c)
-    sc = res_m.store_commits["identity_resolved_membership_current"]
+    (tmp_path / "chained").mkdir()
+    pipe = IDRPipeline(spark, make_cfg(tmp_path / "chained", rows(base)))
+    pipe.run("FULL")
+    for batch in (batch2, batch3):
+        write_parquet(pd.DataFrame(rows(batch)), str(tmp_path / "chained" / "crm.parquet"))
+        last = pipe.run("INCR")
+    full = _full_rerun(spark, tmp_path, "full", batch3)
+    assert _published_state(pipe) == _published_state(full)
+    sc = last.store_commits["identity_resolved_membership_current"]
     assert sc["rewritten_fraction"] == 0.0 and sc.get("upd_buckets", 0) >= 1
 
 

@@ -1,5 +1,5 @@
 """Preflight data-level validation (≙ reference idr_run.py:126-171 /
-IDR_ValidateMetadata.py) + the checkpoint_every CC-round-fusion knob."""
+IDR_ValidateMetadata.py) + the connected-components loops."""
 
 from __future__ import annotations
 
@@ -100,7 +100,7 @@ def test_preflight_check_data_false_skips_loads(spark, tmp_path):
     assert IDRPipeline(spark, cfg).preflight(check_data=False) == []
 
 
-# --------------------------------------------------------------- checkpoint_every
+# --------------------------------------------------------------- CC loops
 
 
 def _chain(spark, n=12):
@@ -114,50 +114,16 @@ def _chain(spark, n=12):
 
 
 @pytest.mark.parametrize("algo", ["hash_min", "star"])
-def test_checkpoint_every_fuses_rounds_same_labels(spark, algo):
+def test_chain_labels_one_component(spark, algo):
     from sql_identity_resolution_spark.operators.graph import alternating_star, hash_min_lp
 
     fn = hash_min_lp if algo == "hash_min" else alternating_star
     nodes, edges = _chain(spark, 12)
-    base = fn(nodes, edges, max_iters=40, checkpoint_every=1)
-    fused = fn(nodes, edges, max_iters=40, checkpoint_every=3)
-    assert base.converged and fused.converged
-    want = {(r["entity_key"], r["label"]) for r in base.labels.collect()}
-    got = {(r["entity_key"], r["label"]) for r in fused.labels.collect()}
-    assert got == want
-    assert len({lbl for _, lbl in got}) == 1  # one component, labeled by its min
-    # fused convergence is only detected at multiples of k (or the last round)
-    assert fused.iterations % 3 == 0 or fused.iterations == 40
-
-
-def test_checkpoint_every_runs_fewer_jobs(spark):
-    """The knob must be OBSERVABLE in the job count: k=4 fuses 4 rounds per
-    action. Measured with AQE off — under AQE every shuffle materialization is
-    its own job, so action count (what the knob controls) is masked."""
-    from sql_identity_resolution_spark.operators.graph import hash_min_lp
-
-    nodes, edges = _chain(spark, 12)
-    sc = spark.sparkContext
-
-    def jobs_during(k):
-        group = f"cc-jobs-k{k}"
-        sc.setJobGroup(group, group, False)
-        try:
-            res = hash_min_lp(nodes, edges, max_iters=40, checkpoint_every=k)
-        finally:
-            sc.setJobGroup("", "", False)
-        assert res.converged
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        j1 = jobs_during(1)
-        j4 = jobs_during(4)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-    # 12 LP rounds: ~1 action/round at k=1 vs ~1 action per 4 rounds at k=4
-    assert j4 <= j1 / 2, f"expected fused rounds to halve jobs: k=1→{j1}, k=4→{j4}"
+    res = fn(nodes, edges, max_iters=40)
+    assert res.converged
+    got = {(r["entity_key"], r["label"]) for r in res.labels.collect()}
+    # one component, labeled by its min
+    assert got == {(f"e{i:03d}", "e000") for i in range(12)}
 
 
 # ----------------------------------------------------- INCR local fast path
@@ -205,13 +171,13 @@ def test_local_union_find_cap_falls_back_to_distributed(spark):
 # ------------------------------------------------------------- frontier LP
 
 
-def test_frontier_matches_dense_hash_min(spark):
+def test_frontier_hash_min_matches_union_find(spark):
     """Frontier (vertex-activation) hash-min must produce IDENTICAL labels to
-    the dense reference-literal form on an adversarial mix (long chain + star
-    + singletons), at k=1 and with fused rounds."""
+    a plain union-find over the same adversarial mix (long chain + star +
+    singletons)."""
     import random
 
-    from sql_identity_resolution_spark.operators.graph import hash_min_lp
+    from sql_identity_resolution_spark.operators.graph import _local_union_find, hash_min_lp
 
     rng = random.Random(7)
     rows = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(14)]           # chain
@@ -221,13 +187,13 @@ def test_frontier_matches_dense_hash_min(spark):
     keys = sorted({k for r in rows for k in r} | {"iso1", "iso2"})
     nodes = spark.createDataFrame([(k,) for k in keys], "entity_key string")
     edges = spark.createDataFrame(rows, "left_entity_key string, right_entity_key string")
-    for k in (1, 3):
-        dense = hash_min_lp(nodes, edges, max_iters=40, checkpoint_every=k, frontier=False)
-        front = hash_min_lp(nodes, edges, max_iters=40, checkpoint_every=k, frontier=True)
-        assert dense.converged and front.converged
-        got_d = {(r["entity_key"], r["label"]) for r in dense.labels.collect()}
-        got_f = {(r["entity_key"], r["label"]) for r in front.labels.collect()}
-        assert got_f == got_d
+    front = hash_min_lp(nodes, edges, max_iters=40)
+    ref = _local_union_find(nodes, edges, max_edges=1000)
+    assert front.converged
+    got_f = {(r["entity_key"], r["label"]) for r in front.labels.collect()}
+    got_u = {(r["entity_key"], r["label"]) for r in ref.labels.collect()}
+    assert got_f == got_u
+    assert ("iso1", "iso1") in got_f and ("c014", "c000") in got_f
     # per-round decomposition is recorded and the delta hits 0 at convergence
     assert front.rounds and front.rounds[-1]["delta"] == 0
     assert all(set(r) == {"sec", "delta"} for r in front.rounds)

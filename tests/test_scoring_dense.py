@@ -12,8 +12,8 @@ for pairs found by several bands (MIN over 64-bit block ids vs MIN over
 band-key strings), which no output row key depends on.
 
 Also covers the ADVICE r3 NULL-text finding: a NULL match_text must not crash
-either the grouped cogroup kernel or the dense path, and must produce no edge
-(the classic path's NULL score is dropped by the ≥threshold filter).
+either scoring path, and must produce no edge (its NULL score is dropped by
+the ≥threshold filter).
 """
 
 from __future__ import annotations
@@ -90,24 +90,41 @@ def _null_text_fixture(spark):
     return groups, members, texts
 
 
-def test_grouped_scoring_null_text_no_crash(spark):
-    """ADVICE r3 (medium): NULL match_text used to raise TypeError in the
-    cogroup kernel's frozenset build. NULL-token pairs are now skipped —
-    same edges as the classic path (whose NULL scores fail the threshold)."""
+def test_classic_null_text_no_edge(spark):
+    """ADVICE r3 (medium): pairs touching a NULL match_text score NULL and
+    fail the threshold — no crash, no edge."""
     groups, members, texts = _null_text_fixture(spark)
     pairs = blocking.candidate_pairs(groups, members)
     rule_meta = {"R_LSH": (0.5, "token_jaccard")}
-    scored_g = scoring.score_candidate_pairs_grouped(pairs, texts, rule_meta=rule_meta)
-    edges_g = {
-        (r["left_entity_key"], r["right_entity_key"])
-        for r in scoring.scored_edges(scored_g, "2026-01-01 00:00:00").collect()
-    }
     scored_c = scoring.score_candidate_pairs(pairs, texts, rule_meta=rule_meta)
     edges_c = {
         (r["left_entity_key"], r["right_entity_key"])
         for r in scoring.scored_edges(scored_c, "2026-01-01 00:00:00").collect()
     }
-    assert edges_g == edges_c == {("bbb", "ccc")}
+    assert edges_c == {("bbb", "ccc")}
+
+    # left-, right- and both-NULL pairs next to a scoreable one: only the
+    # scoreable pair passes, with its exact Jaccard score
+    pairs = spark.createDataFrame(
+        [
+            ("r1", "a", "b", "minhash_band", "k1"),
+            ("r1", "a", "n", "minhash_band", "k1"),  # right side NULL text
+            ("r1", "n", "b", "minhash_band", "k1"),  # left side NULL text
+            ("r1", "m", "n", "minhash_band", "k1"),  # both NULL
+        ],
+        "rule_id string, left_entity_key string, right_entity_key string, "
+        "identifier_type string, identifier_value_norm string",
+    )
+    texts = spark.createDataFrame(
+        [("a", "hello world foo"), ("b", "hello world bar"), ("n", None), ("m", None)],
+        "entity_key string, match_text string",
+    )
+    scored = scoring.score_candidate_pairs(pairs, texts, rule_meta={"r1": (0.3, "token_jaccard")})
+    passing = {
+        (r["left_entity_key"], r["right_entity_key"], r["score"])
+        for r in scored.filter(F.col("score") >= F.col("threshold")).collect()
+    }
+    assert passing == {("a", "b", 0.5)}
 
 
 def test_dense_null_text_no_edge(spark):
@@ -118,7 +135,7 @@ def test_dense_null_text_no_edge(spark):
         rule_id, identifier_type, threshold, scorer = "R_LSH", "LSH_TEXT", 0.5, "token_jaccard"
 
     rid_map = scoring.rid_map_df(spark, [_R()])
-    members_e = blocking.members_dense(members, entity_side, ["LSH_TEXT"])
+    members_e = blocking.dedup_scored_members_dense(members, entity_side, ["LSH_TEXT"])
     pairs = blocking.candidate_pairs_dense(groups, members_e, rid_map, entity_side)
     scored = scoring.score_pairs_dense(pairs, entity_side, rid_map)
     block_dim = scoring.block_dim_df(groups)
@@ -133,7 +150,7 @@ def test_dense_null_text_no_edge(spark):
 
 def test_duplicate_entity_text_rows_collapse(spark):
     """ADVICE r3: duplicate entity_texts rows must not fan out scored rows —
-    both paths collapse to one deterministic (MAX) text per entity."""
+    scoring collapses to one deterministic (MAX) text per entity."""
     groups, members, texts = _null_text_fixture(spark)
     dup_texts = texts.unionByName(
         spark.createDataFrame([("bbb", "shared words here indeed")],
@@ -142,10 +159,7 @@ def test_duplicate_entity_text_rows_collapse(spark):
     pairs = blocking.candidate_pairs(groups, members)
     rule_meta = {"R_LSH": (0.5, "token_jaccard")}
     n_classic = scoring.score_candidate_pairs(pairs, dup_texts, rule_meta=rule_meta).count()
-    n_grouped = scoring.score_candidate_pairs_grouped(pairs, dup_texts, rule_meta=rule_meta).count()
     assert n_classic == 3  # one row per unique pair, not per duplicate text row
-    # grouped omits NULL-token pairs (2 of 3 here involve the NULL-text anchor)
-    assert n_grouped == 1
 
 
 def test_dense_default_master_gate():

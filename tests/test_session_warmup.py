@@ -46,3 +46,38 @@ def test_warmup_once_per_application(spark):
     before = len(S._WARMED_APPS)
     S.build_session(app_name="idr-tests", master="local[*]")  # same app via getOrCreate
     assert len(S._WARMED_APPS) == before
+
+
+def test_local_master_lifts_listing_threshold(spark):
+    # local masters list bucketed stores on the driver (no listing job)
+    assert spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold") == "4096"
+
+
+def test_concurrent_build_session_warms_once(spark, monkeypatch):
+    """Concurrent build_session calls on one application start ONE warm-up
+    (the _WARMED_APPS check-then-add runs under a lock)."""
+    import threading
+
+    app_id = spark.sparkContext.applicationId
+    calls = []
+    monkeypatch.setattr(S, "_warm_python_workers", lambda *a: calls.append(a))
+    S._WARMED_APPS.discard(app_id)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=S.build_session, kwargs={"app_name": "idr-tests", "master": "local[*]"})
+            for _ in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+        S._WARMED_APPS.add(app_id)
+    # warm-up threads run the (patched) target asynchronously: give any
+    # second one time to land before counting
+    threading.Event().wait(1.0)
+    assert len(calls) == 1

@@ -83,20 +83,6 @@ def test_classic_duplicate_texts_still_dedup_by_default(spark):
     assert _scores(scored) == _scores(expected)
 
 
-def test_grouped_texts_unique_parity(spark):
-    texts = spark.createDataFrame(
-        [("a", "x y z w"), ("b", "x y z q"), ("c", "x q r s")],
-        "entity_key string, match_text string",
-    )
-    base = scoring.score_candidate_pairs_grouped(
-        _pairs(spark), texts, rule_meta=RULE_META, texts_unique=False
-    )
-    fast = scoring.score_candidate_pairs_grouped(
-        _pairs(spark), texts, rule_meta=RULE_META, texts_unique=True
-    )
-    assert _scores(fast) == _scores(base)
-
-
 def test_build_entity_side_texts_unique_parity(spark):
     texts = spark.createDataFrame(
         [("a", "x y z w"), ("b", ""), ("c", None)],
@@ -125,8 +111,8 @@ def test_pipeline_derives_flag_from_sources(spark):
         warehouse=f"{tmp}/wh", sources=[source], rules=rules, mappings=mappings
     )
     pipe = IDRPipeline(spark, cfg)
-    pipe._entity_texts()  # lazy — sets the flag without executing the source
-    assert pipe._texts_unique is True
+    _, unique = pipe._entity_texts()  # lazy — no source execution
+    assert unique is True
 
     # an undeclared second text source flips the union back to defensive
     from dataclasses import replace
@@ -136,5 +122,5 @@ def test_pipeline_derives_flag_from_sources(spark):
         warehouse=f"{tmp}/wh2", sources=[source, dirty], rules=rules, mappings=mappings
     )
     pipe2 = IDRPipeline(spark, cfg2)
-    pipe2._entity_texts()
-    assert pipe2._texts_unique is False
+    _, unique2 = pipe2._entity_texts()
+    assert unique2 is False

@@ -34,8 +34,6 @@ def main() -> None:
     ap.add_argument("--corpus-dir", default=None)
     ap.add_argument("--out", default=None)
     ap.add_argument("--cpus", type=int, default=os.cpu_count() or 8)
-    # paired-window A/B knob (VERDICT r5 #2): store_merge_on_read on/off
-    ap.add_argument("--store-mor", choices=["on", "off"], default="on")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -79,9 +77,7 @@ def main() -> None:
             warehouse=wh, sources=[source], rules=rules, mappings=mappings,
             emit_duplicate_text_pairs=False,
             attributes=transcripts_attributes("chat"),
-            store_merge_on_read=args.store_mor == "on",
         )
-        out["store_merge_on_read"] = args.store_mor == "on"
         pipe = IDRPipeline(spark, cfg)
         t0 = time.time()
         res_f = pipe.run("FULL")
